@@ -29,7 +29,11 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Table reader with a per-session PLAN cache: ``spark.read.parquet``
     re-lists the path and re-reads the footer schema on every call (~50-100
     ms per table per query). A DataFrame is an immutable lazy plan — reusing
-    it never caches data; every action still computes from the parquet files."""
+    it never caches data; every action still computes from the parquet files.
+
+    Keying on ``id(spark)`` is safe: each cached DataFrame holds its session
+    (``DataFrame._session``), so a keyed session is never freed and its id
+    cannot be reused by a later session."""
     key = (id(spark), sf_dir, name)
     df = _T_PLANS.get(key)
     if df is None:

@@ -3,7 +3,7 @@
 Mergeable approximate-aggregation sketches (blocked/sectorized Bloom filter,
 HyperLogLog, count-min, KLL quantiles, t-digest, MinHash) implemented as
 batched NumPy kernels driven through Arrow-vectorized PySpark UDFs
-(``mapInArrow`` partials + ``applyInPandas`` merge trees — no per-row Python).
+(``mapInArrow`` partials + ``applyInArrow`` merge trees — no per-row Python).
 
 Design lineage: the Bloom bit layout follows the blocked/sectorized design of
 ``peterboncz/bloomfilter-bsd`` (Lang, Neumann, Kemper, Boncz, "Performance-

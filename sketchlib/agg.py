@@ -4,9 +4,11 @@ This is the structural heart of the graft (SURVEY.md §3.2): the reference
 builds thread-private filters and OR-merges them (bloomfilter-bsd benchmark
 harness, A18 [path-level, unverified]); we build *partition*-private sketches
 inside ``mapInArrow`` (one Python worker per partition, whole Arrow batches,
-no per-row Python) and merge them with a B-ary ``applyInPandas`` tree —
+no per-row Python) and merge them with a B-ary ``applyInArrow`` tree —
 manually mirroring Spark's own partial→final hash-aggregation physical plan,
-because PySpark exposes no Python UDAF (SURVEY.md §3.3).
+because PySpark exposes no Python UDAF (SURVEY.md §3.3). One fold,
+``_merge_blob_rows``, serves both the in-task pre-merge and every tree
+level, Arrow in and Arrow out (blobs never round-trip through pandas).
 
 Scale notes (the 100 TB story):
 - the only shuffles are the optional salted repartition and the merge tree;
@@ -30,8 +32,10 @@ from typing import Iterator
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from sketchlib import arrowutil, blob as blobmod, bloom, cms, cuckoo, hll, kll, minhash, tdigest
 from sketchlib.config import (
@@ -75,10 +79,13 @@ class SketchSpec:
         return _CFG_TO_SKETCH[type(self.cfg)]
 
 
-PARTIAL_SCHEMA = (
-    "sketch string, group string, part int, blob binary, "
-    "rows bigint, items bigint, t_ms double"
-)
+# the one partial-row schema: build output, pre-merge and every merge-tree
+# level emit it (topk's fused pass prepends its candidate columns)
+PARTIAL_SCHEMA = pa.schema([
+    ("sketch", pa.string()), ("group", pa.string()), ("part", pa.int32()),
+    ("blob", pa.binary()), ("rows", pa.int64()), ("items", pa.int64()),
+    ("t_ms", pa.float64()),
+])
 
 _GLOBAL = ""  # group label when group_by is None
 # label for NULL group values (SQL groupBy keeps a null group; the kernel
@@ -367,7 +374,7 @@ def _build_partials_fn(specs: list[SketchSpec], group_by: str | None, part_col: 
                         st[3] += int(rows_per_seg[s])
 
         t_ms = (time.perf_counter() - t0) * 1000.0
-        out = {"sketch": [], "group": [], "part": [], "blob": [], "rows": [], "items": [], "t_ms": []}
+        out = {k: [] for k in PARTIAL_SCHEMA.names}
         for (name, group, pid), (module, cfg, obj, rows, items) in sorted(state.items()):
             payload = obj.to_payload()
             sketch_kind = _CFG_TO_SKETCH[type(cfg)]
@@ -379,20 +386,7 @@ def _build_partials_fn(specs: list[SketchSpec], group_by: str | None, part_col: 
             out["items"].append(items)
             out["t_ms"].append(t_ms)
         if out["sketch"]:
-            yield pa.RecordBatch.from_pydict(
-                out,
-                schema=pa.schema(
-                    [
-                        ("sketch", pa.string()),
-                        ("group", pa.string()),
-                        ("part", pa.int32()),
-                        ("blob", pa.binary()),
-                        ("rows", pa.int64()),
-                        ("items", pa.int64()),
-                        ("t_ms", pa.float64()),
-                    ]
-                ),
-            )
+            yield pa.RecordBatch.from_pydict(out, schema=PARTIAL_SCHEMA)
 
     return fn
 
@@ -429,7 +423,8 @@ def build_partials(
             pruned = salt_repartition(pruned, num_partitions, salt_keys, salt)
         else:
             pruned = pruned.repartition(num_partitions)
-    return pruned.mapInArrow(_build_partials_fn(specs, group_by, part_col), PARTIAL_SCHEMA)
+    return pruned.mapInArrow(_build_partials_fn(specs, group_by, part_col),
+                             from_arrow_schema(PARTIAL_SCHEMA))
 
 
 def list_data_files(spark, path: str, suffix: str = ".parquet") -> list[str]:
@@ -523,25 +518,35 @@ def build_partials_files(
 _MAX_CLOSURE_PATH_BYTES = 64 << 20
 
 
-def _merge_blob_rows(rows: list[dict]) -> dict:
-    """Merge partial rows of one (sketch, group) — the same fold
-    ``_merge_group`` applies, shared so the in-task pre-merge and the tree
-    merge cannot diverge. ``rows`` must be sorted by part id."""
-    blobs = [r["blob"] for r in rows]
+def _merge_blob_rows(tbl: pa.Table) -> pa.Table:
+    """Fold the partial rows of ONE (sketch, group) into one partial row.
+    The only merge fold: the in-task pre-merge and every merge-tree level
+    call it, so the two cannot diverge. Deterministic: rows are folded in
+    part-id order (stable sort); extra input columns (the tree's
+    ``bucket``) are ignored."""
+    # sort indices, not Table.sort_by: sorting the table copies every blob
+    # (~250 ms for two 128 MiB partials on a 4-core Xeon host), and to_numpy
+    # takes half the time of to_pylist for the one copy that remains
+    order = pc.sort_indices(tbl.column("part")).to_numpy()
+    blobs = list(tbl.column("blob").to_numpy(zero_copy_only=False)[order])
     name, _cfg, _ = blobmod.unpack(blobs[0])
     module = MODULES[name]
+    # n-ary merge when the sketch provides one (kll/tdigest): concat-all +
+    # one compaction is permutation-invariant, so the merged bytes do not
+    # depend on partition numbering — the pairwise fold stays for the fully
+    # commutative monoids (bloom OR / hll max / cms add), where it is
     merged = (module.merge_many_blobs(blobs)
               if hasattr(module, "merge_many_blobs")
               else reduce(module.merge_blobs, blobs))
-    return {
-        "sketch": rows[0]["sketch"],
-        "group": rows[0]["group"],
-        "part": min(r["part"] for r in rows),
-        "blob": merged,
-        "rows": sum(r["rows"] for r in rows),
-        "items": sum(r["items"] for r in rows),
-        "t_ms": sum(r["t_ms"] for r in rows),
-    }
+    return pa.table({
+        "sketch": [tbl.column("sketch")[0].as_py()],
+        "group": [tbl.column("group")[0].as_py()],
+        "part": [pc.min(tbl.column("part")).as_py()],
+        "blob": [merged],
+        "rows": [pc.sum(tbl.column("rows")).as_py()],
+        "items": [pc.sum(tbl.column("items")).as_py()],
+        "t_ms": [pc.sum(tbl.column("t_ms")).as_py()],
+    }, schema=PARTIAL_SCHEMA)
 
 
 def build_partials_files_indexed(
@@ -604,25 +609,12 @@ def build_partials_files_indexed(
         if not local_merge:
             yield from partial_batches
             return
-        rows: list[dict] = []
-        for b in partial_batches:
-            rows.extend(b.to_pylist())
-        by_key: dict[tuple[str, str], list[dict]] = {}
-        for r in rows:  # arrive sorted by (sketch, group, part) already
-            by_key.setdefault((r["sketch"], r["group"]), []).append(r)
-        merged = [_merge_blob_rows(v) for v in by_key.values()]
-        if merged:
-            out = {k: [m[k] for m in merged] for k in
-                   ("sketch", "group", "part", "blob", "rows", "items", "t_ms")}
-            yield pa.RecordBatch.from_pydict(
-                out,
-                schema=pa.schema([
-                    ("sketch", pa.string()), ("group", pa.string()),
-                    ("part", pa.int32()), ("blob", pa.binary()),
-                    ("rows", pa.int64()), ("items", pa.int64()),
-                    ("t_ms", pa.float64()),
-                ]),
-            )
+        tbl = pa.Table.from_batches(list(partial_batches), schema=PARTIAL_SCHEMA)
+        # rows arrive sorted by (sketch, group, part): fold each key's run
+        keys = list(zip(tbl.column("sketch").to_pylist(), tbl.column("group").to_pylist()))
+        starts = [i for i in range(len(keys)) if i == 0 or keys[i] != keys[i - 1]]
+        for lo, hi in zip(starts, starts[1:] + [len(keys)]):
+            yield from _merge_blob_rows(tbl.slice(lo, hi - lo)).to_batches()
 
     sorted_pairs = sorted((int(i), f) for i, f in pairs)
     n_tasks = max(1, min(len(sorted_pairs), int(spark.sparkContext.defaultParallelism)))
@@ -653,7 +645,7 @@ def build_partials_files_indexed(
 
         driver = spark.createDataFrame(
             sorted_pairs, "idx long, path string").repartition(n_tasks, "idx")
-    return driver.mapInArrow(scan_fn, PARTIAL_SCHEMA)
+    return driver.mapInArrow(scan_fn, from_arrow_schema(PARTIAL_SCHEMA))
 
 
 def build_sketches_files(
@@ -676,35 +668,6 @@ def build_sketches_files(
     n_parts = max(1, min(len(files), int(spark.sparkContext.defaultParallelism)))
     return merge_partials(partials, fanout=fanout,
                           levels=merge_levels(fanout, n_parts))
-
-
-def _merge_group(pdf):
-    """Merge one (sketch, group[, bucket]) frame of partials into one row.
-    Deterministic: sorted by part id before the fold."""
-    import pandas as pd
-
-    pdf = pdf.sort_values("part", kind="stable")
-    blobs = list(pdf["blob"])
-    name, cfg, _ = blobmod.unpack(blobs[0])
-    module = MODULES[name]
-    # n-ary merge when the sketch provides one (kll/tdigest): concat-all +
-    # one compaction is permutation-invariant, so the merged bytes do not
-    # depend on partition numbering — the pairwise fold stays for the fully
-    # commutative monoids (bloom OR / hll max / cms add), where it is
-    merged = (module.merge_many_blobs(blobs)
-              if hasattr(module, "merge_many_blobs")
-              else reduce(module.merge_blobs, blobs))
-    return pd.DataFrame(
-        {
-            "sketch": [pdf["sketch"].iloc[0]],
-            "group": [pdf["group"].iloc[0]],
-            "part": [int(pdf["part"].min())],
-            "blob": [merged],
-            "rows": [int(pdf["rows"].sum())],
-            "items": [int(pdf["items"].sum())],
-            "t_ms": [float(pdf["t_ms"].sum())],
-        }
-    )
 
 
 def _payload_bytes(cfg) -> int:
@@ -745,16 +708,12 @@ def merge_partials(partials: DataFrame, fanout: int = 64, levels: int = 1) -> Da
     """B-ary tree merge. ``levels`` is ceil(log_fanout(P)) — 1 for P <= 64,
     2 for P <= 4096, 3 covers a million partitions. Each level shuffles only
     blob rows."""
+    schema = from_arrow_schema(PARTIAL_SCHEMA)
     df = partials
     for lvl in range(levels - 1):
         bucketed = df.withColumn("bucket", F.pmod(F.col("part"), F.lit(fanout ** (levels - 1 - lvl))))
-        df = (
-            bucketed.groupBy("sketch", "group", "bucket")
-            .applyInPandas(
-                lambda pdf: _merge_group(pdf.drop(columns=["bucket"])), PARTIAL_SCHEMA
-            )
-        )
-    return df.groupBy("sketch", "group").applyInPandas(_merge_group, PARTIAL_SCHEMA)
+        df = bucketed.groupBy("sketch", "group", "bucket").applyInArrow(_merge_blob_rows, schema)
+    return df.groupBy("sketch", "group").applyInArrow(_merge_blob_rows, schema)
 
 
 def build_sketches(

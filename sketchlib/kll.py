@@ -244,7 +244,7 @@ def merge_many_blobs(blobs: list[bytes]) -> bytes:
     (order-free) and compaction + serialization are pure functions of the
     multisets, the result is byte-identical under ANY permutation of
     ``blobs`` — unlike a pairwise fold, where the guard can fire at
-    different accumulation points. agg._merge_group uses this so the two
+    different accumulation points. agg._merge_blob_rows uses this so the two
     build engines (physical-partition ids vs file indices) merge to the
     same bytes."""
     states = []

@@ -145,143 +145,6 @@ def with_kll_rank(df: DataFrame, blob: bytes, col: str, out: str = "est_rank") -
     return _append_col_map(df, blob, col, out, kernel, pa.float64())
 
 
-def _mul_hash32_sql(key32, idx: int, seed: int):
-    """Catalyst expression for ``hashing.mul_hash32``: ``(key * C) mod 2**32``
-    decomposed into 16-bit halves so every intermediate fits in a SIGNED
-    bigint — safe under ``spark.sql.ansi.enabled`` (a direct 64-bit multiply
-    of two 32-bit operands can exceed 2**63 and would throw there)."""
-    from sketchlib.hashing import MUL_CONSTANTS_32
-
-    c = int(MUL_CONSTANTS_32[(idx + seed) % len(MUL_CONSTANTS_32)])
-    lo = key32.bitwiseAND(F.lit(0xFFFF))
-    hi = F.shiftright(key32, 16)
-    # lo*c < 2**48, ((hi*c) & 0xFFFF) << 16 < 2**32: sum < 2**49
-    return (
-        lo * F.lit(c) + (hi * F.lit(c)).bitwiseAND(F.lit(0xFFFF)) * F.lit(0x10000)
-    ).bitwiseAND(F.lit(0xFFFFFFFF))
-
-
-def _bloom_bit_exprs(key32, cfg) -> list:
-    """One bigint Column per probe = the global bit index, mirroring
-    ``bloom._bit_indices64`` exactly (same constants, same block/sector/zone
-    layout) — parity is pinned by tests against the NumPy kernel."""
-    seed = cfg.hash_seed
-    B, k, s, z = cfg.block_bits, cfg.k, cfg.sectors, cfg.zones
-    sector_bits = cfg.sector_bits
-    lb_sector = int(sector_bits).bit_length() - 1
-    lb_blocks = int(cfg.n_blocks).bit_length() - 1
-
-    h0 = _mul_hash32_sql(key32, 0, seed)
-    if cfg.addressing == "magic":
-        # Lemire fastrange: h0 < 2**32 and n_blocks < 2**31 => product < 2**63
-        blk = F.shiftright(h0 * F.lit(int(cfg.n_blocks)), 32)
-    else:
-        blk = F.shiftright(h0, 32 - lb_blocks) if lb_blocks else F.lit(0)
-    block_base = blk * F.lit(B)
-
-    bits = []
-    if z == 1:
-        for i in range(k):
-            off = F.shiftright(_mul_hash32_sql(key32, 1 + i, seed), 32 - lb_sector)
-            bits.append(block_base + F.lit((i % s) * sector_bits) + off)
-        return bits
-    zone_bits, spz, kpz = B // z, s // z, k // z
-    lb_z = int(z).bit_length() - 1
-    for g in range(z):
-        hz = _mul_hash32_sql(key32, 1 + k + g, seed)
-        zone = F.shiftright(hz, 32 - lb_z) if lb_z else F.lit(0)
-        zone_base = block_base + zone * F.lit(zone_bits)
-        for j in range(kpz):
-            i = g * kpz + j
-            off = F.shiftright(_mul_hash32_sql(key32, 1 + i, seed), 32 - lb_sector)
-            bits.append(zone_base + F.lit((j % spz) * sector_bits) + off)
-    return bits
-
-
-# broadcast-array ceiling for the SQL probe: 2**27 bits = 16 MB = 2M words.
-# Bigger filters still work through the Arrow probe; the word array for them
-# would dominate the broadcast and the driver->JVM conversion.
-_SQL_PROBE_MAX_BITS = 1 << 27
-
-
-def with_bloom_membership_sql(df: DataFrame, blob: bytes, col: str,
-                              out: str = "member") -> DataFrame:
-    """Pure-Catalyst Bloom membership probe: the blocked/sectorized/zoned bit
-    addressing of ``bloom.contains`` expressed as JVM SQL expressions over a
-    plan-literal ``array<bigint>`` word image of the filter — zero
-    Python-worker round-trips. Bit-exact parity with the NumPy kernel is
-    pinned by tests across the geometry grid (pow2/magic, sectors, zones).
-
-    Same contract as :func:`with_bloom_membership` (scalar key column form):
-    never false for inserted keys, null key -> null output, out-of-range key
-    (negative or >= 2**32) raises. Limits: ``hash_family="mul"`` only (the
-    splitmix64 finalizer needs 64x64 multiplies that overflow ANSI bigint
-    arithmetic) and ``m_bits <= 2**27``; both fall back to the Arrow probe.
-
-    WHEN TO USE: environments where Python workers are unavailable or
-    undesirable (pure-JVM clusters, SQL-only surfaces). It is NOT the fast
-    path. Measured (k=8, m=2**21, 20M keys, 32 cores): the Arrow probe runs
-    ~28M keys/s; this probe's throughput swings ~50x with plan shape
-    (0.6 s for 4M keys in one plan, 11.6 s for 20M in another) because
-    whole-stage codegen fuses the k probes into one method that can exceed
-    HotSpot's huge-method JIT limit (~8 KB bytecode) — the stage then runs
-    bytecode-interpreted, invisibly to every Spark metric. Setting
-    ``spark.sql.codegen.hugeMethodLimit`` to ~2000 forces the split-method
-    fallback and recovers ~6x, but the cliff is plan-shape-dependent and a
-    library cannot pin session configs; a compiled Scala UDF remains the
-    only reliable route to a faster-than-Arrow probe (NEXT.md)."""
-    name, cfg, payload = blobmod.unpack(blob)
-    if name != "bloom":
-        raise SketchConfigError("expected a bloom blob")
-    if cfg.hash_family != "mul":
-        raise SketchConfigError(
-            "with_bloom_membership_sql supports hash_family='mul' only; "
-            "use with_bloom_membership for the 'mix' family")
-    if cfg.m_bits > _SQL_PROBE_MAX_BITS:
-        raise SketchConfigError(
-            f"with_bloom_membership_sql supports m_bits <= {_SQL_PROBE_MAX_BITS} "
-            "(broadcast word-array ceiling); use with_bloom_membership")
-
-    raw = np.frombuffer(payload, dtype=np.uint8)
-    if raw.size % 8:
-        raw = np.concatenate([raw, np.zeros(8 - raw.size % 8, np.uint8)])
-    words = raw.view("<i8")  # little bit order: bit i = word i>>6, bit i&63
-    # the word image rides as a PLAN LITERAL, not a joined column: literals
-    # ship once per stage inside the broadcast task binary and are READ
-    # in-place by codegen. Two formulations measured 50-90x slower and are
-    # deliberately avoided: crossJoin(broadcast(one_row_df)) (projections
-    # between the join and the final select copy the full array into every
-    # row's UnsafeRow buffer) and F.lit(python_list) (compiles to a
-    # CreateArray expression that re-materializes all the words PER ROW).
-    # F.lit(ndarray) becomes a single java long[] Literal.
-    words_lit = F.lit(words)
-
-    # integral key columns only: cast('long') on a double/decimal would
-    # silently truncate fractions BEFORE the uint32 range guard (key 5.7
-    # probing as 5), diverging from the NumPy kernel's _as_keys contract
-    from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
-
-    key_type = df.schema[col].dataType
-    if not isinstance(key_type, (ByteType, ShortType, IntegerType, LongType)):
-        raise SketchConfigError(
-            f"with_bloom_membership_sql requires an integral key column; "
-            f"{col!r} is {key_type.simpleString()}")
-    key = F.col(col).cast("long")
-    guard = F.assert_true(
-        key.isNull() | ((key >= 0) & (key <= 0xFFFFFFFF)),
-        F.lit(f"bloom probe key out of uint32 range in column {col!r}"))
-    member = None
-    for bit in _bloom_bit_exprs(key, cfg):
-        word = F.element_at(words_lit, F.shiftright(bit, 6).cast("int") + F.lit(1))
-        # variable in-word shift: shiftright(col, col) via call_function (the
-        # python shiftright wrapper only takes a literal shift amount)
-        t = F.call_function(
-            "shiftright", word, bit.bitwiseAND(F.lit(63)).cast("int")
-        ).bitwiseAND(F.lit(1)) == 1
-        member = t if member is None else member & t
-    return df.withColumn(out, F.when(guard.isNull() & key.isNotNull(), member))
-
-
 def bloom_prune_join(
     left: DataFrame, right: DataFrame, left_key: str, right_blob: bytes, how: str = "inner",
     right_key: str | None = None,

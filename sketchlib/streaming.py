@@ -240,98 +240,6 @@ def stateful_windowed_sketch(
     )
 
 
-def tws_windowed_sketch(
-    stream_df: DataFrame,
-    spec: SketchSpec,
-    ts_col: str,
-    window: str = "10 minutes",
-    watermark: str = "30 minutes",
-):
-    """Same contract as ``stateful_windowed_sketch`` on Spark 4's newer
-    ``transformWithStateInPandas`` engine: one sketch blob of ValueState per
-    event-time window, merged across micro-batches, emitted by an explicit
-    EVENT-TIME TIMER registered at the window end (fires when the watermark
-    passes it). The newer API adds composable state variables and timers —
-    the sketch monoid drops in unchanged.
-
-    Runtime dependency note: the TWS state-server protocol requires
-    ``google.protobuf`` on the driver/workers (ships with real Spark
-    deployments; absent in this offline dev container, where the
-    ``applyInPandasWithState`` variant above covers the stateful path).
-
-    Output schema: ``win_start timestamp, blob binary, rows bigint``.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor, StatefulProcessorHandle,
-    )
-
-    cfg_json = spec.cfg.to_json()
-    sketch_kind = spec.sketch
-    col = spec.col
-    session_tz = stream_df.sparkSession.conf.get(
-        "spark.sql.session.timeZone") or "UTC"
-
-    class SketchProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._state = handle.getValueState("sk", "blob binary, rows bigint")
-
-        def handleInputRows(self, key, rows, timerValues):
-            import numpy as np
-
-            from sketchlib import blob as blobmod
-            from sketchlib.agg import MODULES
-            from sketchlib.config import _Cfg
-
-            cfg = _Cfg.from_json(cfg_json)
-            module = MODULES[sketch_kind]
-            builder = module.new_builder(cfg)
-            n = 0
-            for pdf in rows:
-                flat = _series_values(pdf[col], np, pd)
-                if flat.size:
-                    builder.update(flat)
-                n += len(pdf)
-            new_blob = blobmod.pack(sketch_kind, cfg, builder.to_payload())
-            cur = self._state.get()
-            if cur is not None:
-                new_blob = module.merge_blobs(bytes(cur[0]), new_blob)
-                n += int(cur[1])
-            self._state.update((new_blob, n))
-            # emit when the watermark passes the window end (idempotent
-            # re-registration across micro-batches)
-            self._handle.registerTimer(_epoch_ms(key[1], session_tz))
-            return iter(())
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            cur = self._state.get()
-            self._state.clear()
-            if cur is None:
-                return
-            yield pd.DataFrame(
-                {"win_start": [key[0]], "blob": [bytes(cur[0])], "rows": [int(cur[1])]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    keyed = (
-        stream_df.where(F.col(ts_col).isNotNull())
-        .withWatermark(ts_col, watermark)
-        .withColumn("_win", F.window(F.col(ts_col), window))
-        .withColumn("_ws", F.col("_win.start"))
-        .withColumn("_we", F.col("_win.end"))
-        .drop("_win")
-    )
-    return keyed.groupBy("_ws", "_we").transformWithStateInPandas(
-        SketchProcessor(),
-        outputStructType="win_start timestamp, blob binary, rows bigint",
-        outputMode="append",
-        timeMode="eventTime",
-    )
-
-
 def run_stream_to_sketches(
     spark: SparkSession,
     stream_df: DataFrame,

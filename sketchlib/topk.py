@@ -28,17 +28,15 @@ import numpy as np
 import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from sketchlib import agg, arrowutil, blob as blobmod, cms
 from sketchlib.config import CMSConfig, SketchConfigError
 
 # candidate rows carry (value, cnt); partial rows carry agg.PARTIAL_SCHEMA's
 # fields with value/cnt null — one union schema so one pass emits both
-_FUSED_SCHEMA = (
-    "value bigint, cnt bigint, "
-    "sketch string, group string, part int, blob binary, "
-    "rows bigint, items bigint, t_ms double"
-)
+_FUSED_SCHEMA = pa.schema(
+    [("value", pa.int64()), ("cnt", pa.int64()), *agg.PARTIAL_SCHEMA])
 
 
 def _make_local_pass(col: str, c: int, cfg_json: str):
@@ -132,20 +130,20 @@ def _make_local_pass(col: str, c: int, cfg_json: str):
         if uniq.size > c:
             top = np.argpartition(-cnt, c - 1)[:c]
             uniq, cnt = uniq[top], cnt[top]
+        none = [None] * uniq.size
         yield pa.RecordBatch.from_pydict(
             {
-                "value": pa.array(list(uniq.astype(np.int64)) + [None], pa.int64()),
-                "cnt": pa.array(list(cnt.astype(np.int64)) + [None], pa.int64()),
-                "sketch": pa.array([None] * uniq.size + ["cms"], pa.string()),
-                "group": pa.array([None] * uniq.size + [""], pa.string()),
-                "part": pa.array([None] * uniq.size + [part_id], pa.int32()),
-                "blob": pa.array([None] * uniq.size + [payload], pa.binary()),
-                "rows": pa.array([None] * uniq.size + [n_rows], pa.int64()),
-                "items": pa.array([None] * uniq.size + [n_items], pa.int64()),
-                "t_ms": pa.array(
-                    [None] * uniq.size + [(time.perf_counter() - t0) * 1e3],
-                    pa.float64()),
-            }
+                "value": uniq.astype(np.int64).tolist() + [None],
+                "cnt": cnt.astype(np.int64).tolist() + [None],
+                "sketch": none + ["cms"],
+                "group": none + [""],
+                "part": none + [part_id],
+                "blob": none + [payload],
+                "rows": none + [n_rows],
+                "items": none + [n_items],
+                "t_ms": none + [(time.perf_counter() - t0) * 1e3],
+            },
+            schema=_FUSED_SCHEMA,
         )
 
     return local_pass
@@ -156,7 +154,7 @@ def _fused_scan(df: DataFrame, col: str, c: int, cfg: CMSConfig) -> DataFrame:
     CMS-partial row (union schema). Callers persist the (tiny) result and
     split it into the candidate and partial sides without rescanning."""
     return df.select(col).mapInArrow(
-        _make_local_pass(col, c, cfg.to_json()), _FUSED_SCHEMA)
+        _make_local_pass(col, c, cfg.to_json()), from_arrow_schema(_FUSED_SCHEMA))
 
 
 def approx_topk(
@@ -180,7 +178,7 @@ def approx_topk(
     fused = _fused_scan(df, col, c, cfg).persist()
     try:
         partials = fused.where(F.col("blob").isNotNull()).select(
-            "sketch", "group", "part", "blob", "rows", "items", "t_ms")
+            *agg.PARTIAL_SCHEMA.names)
         fanout = agg._auto_fanout([agg.SketchSpec("cms", cfg, col)])
         n_parts = df.rdd.getNumPartitions()
         merged = agg.merge_partials(

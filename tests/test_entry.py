@@ -13,6 +13,7 @@ import pandas as pd
 import pytest
 
 import __spark_entry__ as entrymod
+from dump_queries import canon as _canon
 
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = [
@@ -27,18 +28,6 @@ def ddb():
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
     return con
-
-
-def _canon(pdf: pd.DataFrame) -> pd.DataFrame:
-    pdf = pdf.reindex(sorted(pdf.columns), axis=1)
-    for c in pdf.columns:
-        if pdf[c].dtype == object:
-            pdf[c] = pdf[c].astype(str)
-        elif np.issubdtype(pdf[c].dtype, np.floating):
-            pdf[c] = pdf[c].round(9)
-        elif str(pdf[c].dtype).startswith("datetime"):
-            pdf[c] = pdf[c].astype(str)
-    return pdf.sort_values(list(pdf.columns), kind="stable").reset_index(drop=True)
 
 
 ORACLE_NAMES = sorted(entrymod.oracle_sql().keys())

@@ -413,7 +413,7 @@ def test_tdigest_chunk_invariance():
 
 
 def test_kll_tdigest_merge_many_permutation_invariant():
-    """merge_many_blobs (the n-ary merge agg._merge_group uses) must be
+    """merge_many_blobs (the n-ary merge agg._merge_blob_rows uses) must be
     byte-identical under any permutation of its inputs — this is what makes
     the merged blob independent of partition numbering across engines."""
     import numpy as np

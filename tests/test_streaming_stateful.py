@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import datetime as dt
 
-import pytest
 from pyspark.sql import Row, functions as F
 
 from sketchlib import agg, hll, streaming
@@ -52,73 +51,6 @@ def test_stateful_windowed_hll(spark, tmp_path_factory):
         for r in spark.read.parquet(f"{sink_dir}/data").collect()
     }
     # hours 0 and 1 must have closed (hour 9's watermark passed them)
-    assert base in got and base + dt.timedelta(hours=1) in got
-    batch = spark.read.parquet(f"{in_dir}/f*")
-    for ws, (blob, rows) in got.items():
-        sl = batch.filter(
-            (F.col("ts") >= ws) & (F.col("ts") < ws + dt.timedelta(hours=1))
-        )
-        assert rows == sl.count()
-        exact = sl.agg(F.countDistinct("token").alias("d")).collect()[0]["d"]
-        est = hll.estimate_blob(blob)
-        assert abs(est - exact) / exact < 0.1
-
-
-def _has_protobuf() -> bool:
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithStateInPandas needs google.protobuf (state-server "
-    "protocol); not installed in this offline container and installs are "
-    "forbidden — the operator is implemented and this test runs wherever "
-    "protobuf exists",
-)
-def test_tws_windowed_hll(spark, tmp_path_factory):
-    """Same contract on the newer transformWithStateInPandas engine: explicit
-    event-time timers emit the final per-window blob; results must match the
-    batch-built sketch exactly (same monoid, same kernels)."""
-    base = dt.datetime(2026, 3, 1, 0, 0, 0)
-    in_dir = str(tmp_path_factory.mktemp("tws_in"))
-    for i, hour in enumerate([0, 1, 9]):
-        rows = [
-            Row(ts=base + dt.timedelta(hours=hour, seconds=j % 3500), token=(j * 17 + hour) % 1500)
-            for j in range(3_000)
-        ]
-        spark.createDataFrame(rows).coalesce(1).write.mode("overwrite").parquet(
-            f"{in_dir}/f{i}"
-        )
-
-    stream = (
-        spark.readStream.schema("ts timestamp, token long")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{in_dir}/f*")
-    )
-    spec = agg.SketchSpec("hll", HLLConfig(p=12), "token")
-    out = streaming.tws_windowed_sketch(
-        stream, spec, ts_col="ts", window="60 minutes", watermark="10 minutes"
-    )
-    sink_dir = str(tmp_path_factory.mktemp("tws_out"))
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", f"{sink_dir}/data")
-        .option("checkpointLocation", f"{sink_dir}/chk")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-
-    got = {
-        r["win_start"]: (bytes(r["blob"]), r["rows"])
-        for r in spark.read.parquet(f"{sink_dir}/data").collect()
-    }
     assert base in got and base + dt.timedelta(hours=1) in got
     batch = spark.read.parquet(f"{in_dir}/f*")
     for ws, (blob, rows) in got.items():
