@@ -18,11 +18,24 @@ import sys
 import time
 
 
+REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, os.path.join(REPO, "bench"))
+sys.path.insert(0, os.path.join(REPO, "perfbench"))
+import host  # noqa: E402
+import noise  # noqa: E402
+
+# every file a run writes sits under the git-ignored .cache/: the corpus
+# cache, the spin floor and the per-query noise side file
+CACHE_DIR = os.path.join(REPO, ".cache")
+SPIN_FLOOR_FILE = os.path.join(REPO, noise.SPIN_FLOOR)
+SIDE_FILE = os.path.join(CACHE_DIR, "bench", "noise_last.json")
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or host.cores())
 
-    # --- noise instrumentation (shared with bench/run_scaling.py) --------------
+    # --- noise instrumentation (bench/noise.py) -------------------------------
     # Round-2 lesson, round-3 fix: the old single-thread calibration spin was
     # BLIND to partial occupancy (a tenant eating 16 of 32 cores leaves one
     # spin thread at full speed while halving the query), so BENCH_r02
@@ -31,9 +44,6 @@ def main() -> None:
     # measured window is wrapped in /proc/stat + process-tree attribution:
     # clean = near-zero hypervisor steal AND near-zero external busy cores
     # inside exactly the timed section; dirty windows are retried.
-    sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench"))
-    import noise
-
     t_wait = time.time()
     while time.time() - t_wait < 90 and os.getloadavg()[0] > 2.5:
         time.sleep(5)
@@ -43,24 +53,11 @@ def main() -> None:
     # Host-speed epoch context: this VM's per-core speed is BIMODAL even when
     # verifiably idle (hypervisor frequency/co-scheduling epochs, NEXT.md) —
     # a per-run calibration baseline cannot see that, so ratios look clean
-    # while every wall-clock number runs 2x slow. Persist the best spin ever
-    # observed and (a) wait briefly for a fast epoch, (b) report the factor.
-    # The floor is aged: it is the min over observations from the last 7
-    # days, not an all-time ratchet — if the VM is permanently migrated to
-    # slower hardware the floor relearns within a week instead of gating
-    # every future run behind the 90 s fast-epoch wait forever.
-    floor_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                              "BENCH", "spin_floor.json")
+    # while every wall-clock number runs 2x slow. Keep the best spin of the
+    # last 7 days (noise.spin_observations) and (a) wait briefly for a fast
+    # epoch, (b) report the factor.
     now = time.time()
-    obs: list[list[float]] = []
-    try:
-        with open(floor_path) as fh:
-            data = json.load(fh)
-        obs = [o for o in data.get("observations", []) if now - o[0] < 7 * 86400]
-        if not obs and "spin_floor_ms" in data:  # legacy single-value format
-            obs = [[now, float(data["spin_floor_ms"])]]
-    except (OSError, ValueError, KeyError, TypeError):
-        obs = []
+    obs = noise.spin_observations(REPO)
     spin_floor = min([o[1] for o in obs] + [calib_ref])
     t_wait = time.time()
     while time.time() - t_wait < 90 and calib_ref > 1.3 * spin_floor:
@@ -68,8 +65,8 @@ def main() -> None:
         calib_ref = min(noise.spin_ms() for _ in range(3))
     obs.append([round(now, 1), round(calib_ref, 2)])
     spin_floor = min(spin_floor, calib_ref)
-    os.makedirs(os.path.dirname(floor_path), exist_ok=True)
-    with open(floor_path, "w") as fh:
+    os.makedirs(os.path.dirname(SPIN_FLOOR_FILE), exist_ok=True)
+    with open(SPIN_FLOOR_FILE, "w") as fh:
         json.dump({"spin_floor_ms": round(spin_floor, 2),
                    "observations": obs[-200:]}, fh)
     host_speed_factor = round(calib_ref / spin_floor, 2)
@@ -91,7 +88,7 @@ def main() -> None:
         # task per core and a straggler tail)
         .config("spark.sql.files.maxPartitionBytes", "4m")
         .config("spark.sql.files.openCostInBytes", "4m")
-        .config("spark.driver.memory", "48g")
+        .config("spark.driver.memory", f"{host.heap_gb()}g")
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
@@ -103,8 +100,7 @@ def main() -> None:
     )
 
     n_docs = max(2_000, int(2_000_000 * sf))
-    cache_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".cache")
-    corpus_path = datagen.corpus_parquet(spark, n_docs, cache_dir, partitions=4 * cpus)
+    corpus_path = datagen.corpus_parquet(spark, n_docs, CACHE_DIR, partitions=4 * cpus)
     corpus = spark.read.parquet(corpus_path)
     total_tokens = corpus.agg(F.sum("n_tok")).collect()[0][0]
 
@@ -284,12 +280,11 @@ def main() -> None:
         ).count(),
     )
 
-    # measured per-geometry probe costs (ns/key, min-of-reps) — the live
-    # input for advisor.suggest_config_cost's performance-optimal selection
+    # measured per-geometry probe costs (ns/key, min-of-reps), reported in
+    # the side file beside the advisor's fitted model
     from sketchlib import advisor
 
     probe_ns = {}
-    probe_rows = []
     for label, geom, k in (
         ("reg64_k4", dict(word_bits=64, words_per_block=1, sectors=1), 4),
         ("cl512_k4", dict(word_bits=64, words_per_block=8, sectors=1), 4),
@@ -297,13 +292,8 @@ def main() -> None:
         ("cl512s8z2_k8", dict(word_bits=64, words_per_block=8, sectors=8, zones=2), 8),
     ):
         cfg = BloomConfig(m_bits=1 << 21, k=k, **geom)
-        ns = round(advisor.measure_probe_ns(cfg, reps=3), 1)
-        probe_ns[label] = ns
-        probe_rows.append(dict(block_bits=cfg.block_bits, sectors=cfg.sectors,
-                               zones=cfg.zones, k=cfg.k, m_bits=cfg.m_bits, ns=ns))
+        probe_ns[label] = round(advisor.measure_probe_ns(cfg, reps=3), 1)
     extra["probe_ns_per_key"] = probe_ns
-    # persist so advisor.suggest_config_cost auto-prefers live measurements
-    extra["probe_table_path"] = str(advisor.save_probe_table(probe_rows))
 
     # keep the headline comparable across rounds: sum over the round-2 query
     # set (q_bloom_probe_20m and q_hll_global are new-in-round-3 rows)
@@ -318,8 +308,8 @@ def main() -> None:
     # Round-3 postmortem: the headline line once embedded the full per-query
     # noise dict and outgrew the driver's stdout tail capture, so BENCH_r03
     # recorded "parsed": null. The contract is ONE compact JSON line as the
-    # LAST stdout line; everything else (noise attribution, probe tables,
-    # spin metadata) goes to BENCH/noise_last.json for humans and the judge.
+    # LAST stdout line; everything else (noise attribution, probe costs,
+    # spin metadata) goes to the side file for readers.
     side = {
         "query_noise": query_noise,
         "calib_spin_ms": round(calib_ref, 2),
@@ -328,9 +318,8 @@ def main() -> None:
         "loadavg_at_exit": round(os.getloadavg()[0], 2),
         **extra,
     }
-    side_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                             "BENCH", "noise_last.json")
-    with open(side_path, "w") as fh:
+    os.makedirs(os.path.dirname(SIDE_FILE), exist_ok=True)
+    with open(SIDE_FILE, "w") as fh:
         json.dump(side, fh, indent=1)
     spark.stop()
     # per-query clean flags travel WITH the headline (round-4 lesson: a
@@ -350,7 +339,7 @@ def main() -> None:
         "build_tokens_per_sec": extra["sketch_build_tokens_per_sec"],
         "probe20_keys_per_sec": extra["bloom_probe20_keys_per_sec"],
         "dirty": dirty,
-        "noise_detail": "BENCH/noise_last.json",
+        "noise_detail": os.path.relpath(SIDE_FILE, REPO),
     }
     sys.stdout.flush()
     print(json.dumps(headline), flush=True)

@@ -52,9 +52,9 @@ def _epoch_factor() -> float:
     floor = noise.read_spin_floor(REPO)
     if floor is None:
         # no (or corrupt) floor on record: 0.0 = "epoch unknown" sentinel.
-        # Deliberately NOT run_scaling.spin_floor()'s fresh-measurement
-        # fallback — that would anchor the factor to the CURRENT epoch and
-        # report ~1.0 no matter how slow the host actually is.
+        # Deliberately NOT a fresh-measurement fallback — that would anchor
+        # the factor to the CURRENT epoch and report ~1.0 no matter how slow
+        # the host actually is.
         return 0.0
     return round(noise.spin_ms_parallel(4) / floor, 2)
 

@@ -34,25 +34,38 @@ _REPS = 40
 _CLK = os.sysconf("SC_CLK_TCK")
 
 
-def read_spin_floor(repo: str) -> float | None:
-    """THE single reader for BENCH/spin_floor.json (bench.py is the writer):
-    the best single-spin (ms) this host has ever shown, or None when the
-    file is missing/corrupt/non-positive. Callers choose their own fallback
-    semantics (fresh measurement, unknown-epoch sentinel, ...) — but the
-    file format is parsed in exactly one place."""
-    path = os.path.join(repo, "BENCH", "spin_floor.json")
+# bench.py appends one calibration spin per run here; the floor is the best
+# spin of the last 7 days, not an all-time ratchet, so a host moved to slower
+# hardware relearns its floor within a week
+SPIN_FLOOR = os.path.join(".cache", "bench", "spin_floor.json")
+SPIN_FLOOR_MAX_AGE_S = 7 * 86400
+
+
+def spin_observations(repo: str) -> list[list[float]]:
+    """THE single parser for ``SPIN_FLOOR`` under ``repo`` (bench.py is the
+    writer): its [unix_ts, spin_ms] observations of the last 7 days, or []
+    when the file is missing or corrupt. A legacy single-value file counts
+    as one observation taken now."""
+    now = time.time()
     try:
-        with open(path) as fh:
+        with open(os.path.join(repo, SPIN_FLOOR)) as fh:
             data = json.load(fh)
-        obs = [float(o[1]) for o in data.get("observations", [])]
-        if not obs and "spin_floor_ms" in data:  # legacy single-value format
-            obs = [float(data["spin_floor_ms"])]
-        floor = min(obs)
-        return floor if floor > 0 else None
-    except (OSError, ValueError, KeyError, TypeError, AttributeError, IndexError):
-        # AttributeError: a JSON top-level list has no .get;
-        # IndexError: a malformed observations entry like [[]] (o[1] missing)
-        return None
+        if "observations" not in data:  # legacy single-value format
+            return [[now, float(data["spin_floor_ms"])]]
+        obs = [[float(o[0]), float(o[1])] for o in data["observations"]]
+    except (OSError, ValueError, KeyError, TypeError, IndexError):
+        # TypeError: a JSON top-level list or a malformed entry;
+        # IndexError: an entry like [] or [1.0] (o[1] missing)
+        return []
+    return [o for o in obs if now - o[0] < SPIN_FLOOR_MAX_AGE_S]
+
+
+def read_spin_floor(repo: str) -> float | None:
+    """The best calibration spin (ms) of the last 7 days, or None when there
+    is none or it is non-positive. Callers choose their own fallback
+    (fresh measurement, unknown-epoch sentinel, ...)."""
+    floor = min((o[1] for o in spin_observations(repo)), default=0.0)
+    return floor if floor > 0 else None
 
 
 def _spin_worker(_i: int) -> float:

@@ -14,9 +14,9 @@ and returns the argmin; ``skyline`` returns the whole frontier for
 inspection.
 
 Probe costs: ``measure_probe_ns`` times the actual kernel on this machine
-(bench.py records a fresh table per run); ``_model_probe_ns`` is the built-in
-fallback fitted to measurements on the development host (2026-08-16,
-local[32] sandbox, RAM-resident filters):
+(bench/calibrate.py sweeps it into the committed size curves);
+``_model_probe_ns`` is the built-in fallback fitted to measurements on the
+development host (2026-08-16, local[32] sandbox, RAM-resident filters):
 
     geometry            k   m=2^21   m=2^24   (ns/key, min of 5 reps)
     reg64               4     17.5     25.7
@@ -45,21 +45,10 @@ import numpy as np
 from sketchlib import fpr as fprmod
 from sketchlib.config import BloomConfig
 
-# bench.py persists its per-run measured probe table here; the selector
-# auto-loads it so suggest_config_cost prefers live measurements over the
-# fitted model without the caller threading the table through
-PROBE_TABLE_ENV = "SKETCHLIB_PROBE_TABLE"
-_DEFAULT_PROBE_TABLE = Path(__file__).resolve().parent.parent / "BENCH" / "probe_table.json"
-
-
-def probe_table_path() -> Path:
-    return Path(os.environ.get(PROBE_TABLE_ENV, str(_DEFAULT_PROBE_TABLE)))
-
-
 def host_fingerprint() -> str:
     """Stable hardware identity: CPU model + logical core count. hostnames
     change every boot in containerized/ephemeral environments, so keying the
-    probe table on platform.node() silently discarded fresh measurements on
+    calibration on platform.node() silently discarded fresh measurements on
     the next run (ADVICE r4); the CPU model survives reboots and still
     rejects tables carried to genuinely different hardware."""
     model = ""
@@ -80,27 +69,10 @@ def host_fingerprint() -> str:
     return f"{model}/{os.cpu_count()}c"
 
 
-def save_probe_table(rows: list[dict], path=None) -> Path:
-    """Persist measured probe costs; each row carries the config identity
-    (block_bits, sectors, zones, k) plus ``ns`` (ns/key) and free-form
-    context (m_bits, host note, ...)."""
-    p = Path(path) if path is not None else probe_table_path()
-    p.parent.mkdir(parents=True, exist_ok=True)
-    meta = {"saved_at": time.time(), "host": platform.node(),
-            "host_fp": host_fingerprint()}
-    # atomic replace, same rationale as save_calibration: a crash mid-write
-    # must not leave truncated JSON that load_probe_table silently treats as
-    # "no measurements" (falling back to the fitted model with no signal)
-    tmp = p.with_suffix(".json.tmp")
-    tmp.write_text(json.dumps({"rows": rows, **meta}, indent=1))
-    os.replace(tmp, p)
-    return p
-
-
-# measurements older than this are ignored on auto-load: a table measured in
+# calibration points older than this are ignored on load: a point measured in
 # a different hypervisor epoch (or on a pre-migration host) must not silently
 # steer suggest_config_cost weeks later (ADVICE r3)
-PROBE_TABLE_MAX_AGE_S = 7 * 86400
+CALIBRATION_MAX_AGE_S = 7 * 86400
 
 # ---------------------------------------------------------------------------
 # Size-sweep calibration (reference A15, `tools/calibration` [path-level,
@@ -109,8 +81,8 @@ PROBE_TABLE_MAX_AGE_S = 7 * 86400
 # consumes. The restoration here is the same shape one tier up: a measured
 # t_probe(m) curve per geometry for the NumPy probe kernel, persisted
 # best-per-point across runs (the min over a noisy multi-tenant box is the
-# signal, same policy as BENCH/spin_floor.json), host-fingerprinted and
-# age-capped like the flat probe table. suggest_config_cost interpolates the
+# signal, same policy as bench.py's spin floor), host-fingerprinted and
+# age-capped per point. suggest_config_cost interpolates the
 # curve at the candidate's m, so cache-resident and RAM-resident candidates
 # are priced from measurements in their own size regime instead of the
 # two-regime fitted bump.
@@ -196,7 +168,7 @@ def load_calibration(path=None, max_age_s: float | None = None) -> dict | None:
         return None
     if data.get("host_fp") != host_fingerprint():
         return None
-    age_cap = PROBE_TABLE_MAX_AGE_S if max_age_s is None else max_age_s
+    age_cap = CALIBRATION_MAX_AGE_S if max_age_s is None else max_age_s
     now = time.time()
     curves: dict[tuple, list] = {}
     stale_max: dict[tuple, int] = {}  # largest m dropped per geometry
@@ -250,62 +222,10 @@ def _calibration_cost_fn(curves: dict,
     return cost_fn
 
 
-# filters at or below this size are cache-resident on the measured hosts;
-# above it the model adds the memory-bound per-hash cost (see docstring)
-_CACHE_REGIME_BITS = 1 << 22
-
-
-def _regime(m_bits: int) -> bool:
-    return m_bits <= _CACHE_REGIME_BITS
-
-
-def load_probe_table(path=None, max_age_s: float | None = None) -> dict | None:
-    """Load the persisted table as {(block_bits, sectors, zones, k,
-    cache_regime): ns} — cache_regime is derived from the m_bits the
-    measurement ran at, so a cache-resident 2^21-bit measurement never
-    overrides the model's memory-bound estimate for a multi-GB filter.
-    None when absent/unreadable, STALE (older than ``max_age_s``, default
-    PROBE_TABLE_MAX_AGE_S) or measured on a different host — callers fall
-    back to the fitted model rather than trusting ambient measurements from
-    another machine or frequency epoch."""
-    p = Path(path) if path is not None else probe_table_path()
-    try:
-        data = json.loads(p.read_text())
-    except (OSError, ValueError):
-        return None
-    age_cap = PROBE_TABLE_MAX_AGE_S if max_age_s is None else max_age_s
-    saved_at = data.get("saved_at")
-    if saved_at is not None and time.time() - float(saved_at) > age_cap:
-        return None
-    fp = data.get("host_fp")
-    if fp is not None:
-        if fp != host_fingerprint():
-            return None
-    else:
-        # legacy tables keyed on hostname only: keep the old check so a
-        # table copied from a different machine is still rejected
-        host = data.get("host")
-        if host is not None and host != platform.node():
-            return None
-    # legacy tables (no saved_at/host) still load — provenance via
-    # resolve_probe_cost's cost_source lets callers see what they got
-    out = {}
-    for r in data.get("rows", []):
-        try:
-            key = (int(r["block_bits"]), int(r["sectors"]), int(r["zones"]),
-                   int(r["k"]), _regime(int(r.get("m_bits", 0))))
-            out[key] = float(r["ns"])
-        except (KeyError, TypeError, ValueError):
-            continue
-    return out or None
-
-
 def _table_cost_fn(table: dict) -> Callable[[BloomConfig], float]:
+    """Caller-passed {(block_bits, sectors, zones, k): ns} table; geometries
+    it does not list are priced by the fitted model."""
     def cost_fn(cfg: BloomConfig) -> float:
-        key = (cfg.block_bits, cfg.sectors, cfg.zones, cfg.k, _regime(cfg.m_bits))
-        if key in table:
-            return table[key]
-        # legacy 4-tuple tables (explicit caller-passed dicts) stay supported
         return table.get((cfg.block_bits, cfg.sectors, cfg.zones, cfg.k),
                          _model_probe_ns(cfg))
     return cost_fn
@@ -313,24 +233,21 @@ def _table_cost_fn(table: dict) -> Callable[[BloomConfig], float]:
 
 def resolve_probe_cost(probe_ns=None) -> tuple[Callable[[BloomConfig], float], str]:
     """Pick the probe-cost source: explicit callable/table from the caller,
-    else the persisted size-sweep calibration curves (A15, bench/calibrate.py),
-    else the bench-measured flat probe table, else the fitted model. Returns
-    (cost_fn, source) with source in {'explicit-callable', 'explicit-table',
-    'calibration-curve', 'measured-table', 'fitted-model'} so callers can
-    report provenance. The calibration cost function falls through to the
-    next source per-config for geometries it has no curve for."""
+    else the committed size-sweep calibration curves (A15, bench/calibrate.py),
+    else the fitted model. Returns (cost_fn, source) with source in
+    {'explicit-callable', 'explicit-table', 'calibration-curve',
+    'fitted-model'} so callers can report provenance. The calibration cost
+    function falls back to the fitted model per config for geometries it has
+    no curve for."""
     if callable(probe_ns):
         return probe_ns, "explicit-callable"
     if isinstance(probe_ns, dict):
         return _table_cost_fn(probe_ns), "explicit-table"
-    table = load_probe_table()
-    fallback = _table_cost_fn(table) if table else _model_probe_ns
     curves = load_calibration()
     if curves:
-        return _calibration_cost_fn(curves, fallback), "calibration-curve"
-    if table:
-        return fallback, "measured-table"
+        return _calibration_cost_fn(curves, _model_probe_ns), "calibration-curve"
     return _model_probe_ns, "fitted-model"
+
 
 # geometry menu the selector scans: the reference's main design points
 DEFAULT_GEOMETRIES: tuple[dict, ...] = (
@@ -404,9 +321,7 @@ def skyline(n: int, t_w_ns: float, geometries=None, max_bits_per_key: int = 24,
             ) -> list[tuple[float, float, float, BloomConfig]]:
     """All candidates as (total_cost_ns, probe_ns, fpr, cfg), cheapest first.
     ``probe_ns`` may be a callable, a {(block_bits, sectors, zones, k): ns}
-    dict of measurements, or None — which prefers the bench-persisted
-    measured table (``load_probe_table``) and falls back to the fitted
-    model."""
+    dict of measurements, or None — see ``resolve_probe_cost``."""
     cost_fn, _source = resolve_probe_cost(probe_ns)
     rows = []
     for cfg in _candidate_configs(n, geometries, max_bits_per_key):

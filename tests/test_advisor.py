@@ -16,11 +16,10 @@ SWEEP = [0.0, 10.0, 100.0, 1_000.0, 10_000.0, 1e6, 1e8]
 
 
 @pytest.fixture(autouse=True)
-def _no_persisted_probe_table(monkeypatch, tmp_path):
+def _no_persisted_calibration(monkeypatch, tmp_path):
     """The model-based properties below must not be perturbed by a
-    bench-persisted probe table or calibration curve lying around in BENCH/ —
-    point both loaders at empty locations unless a test writes one itself."""
-    monkeypatch.setenv(advisor.PROBE_TABLE_ENV, str(tmp_path / "absent.json"))
+    calibration curve lying around in BENCH/ — point the loader at an empty
+    location unless a test writes one itself."""
     monkeypatch.setenv(advisor.CALIBRATION_ENV, str(tmp_path / "absent_calib.json"))
 
 
@@ -64,48 +63,22 @@ def test_measured_table_overrides_model():
     assert pick.block_bits != 512
 
 
-def test_persisted_table_auto_loaded(tmp_path, monkeypatch):
-    """bench.py persists its measured table; suggest_config_cost(probe_ns=None)
-    must auto-prefer it over the fitted model (round-2 VERDICT item #5)."""
+def test_bench_probe_table_not_loaded(tmp_path, monkeypatch):
+    """A probe table in the format bench.py used to persist, fresh and from
+    this host, at the path SKETCHLIB_PROBE_TABLE used to name, must not steer
+    the selector: library results never depend on what a bench run wrote."""
     path = tmp_path / "probe_table.json"
-    monkeypatch.setenv(advisor.PROBE_TABLE_ENV, str(path))
-    # nothing persisted yet -> fitted model
-    fn, source = advisor.resolve_probe_cost(None)
-    assert source == "fitted-model"
-    # persist a table that makes 512-bit blocks absurdly expensive
+    monkeypatch.setenv("SKETCHLIB_PROBE_TABLE", str(path))
+    model_pick = advisor.suggest_config_cost(N, 5_000.0, probe_ns=advisor._model_probe_ns)
     rows = []
     for cfg in advisor._candidate_configs(N):
-        key = dict(block_bits=cfg.block_bits, sectors=cfg.sectors,
-                   zones=cfg.zones, k=cfg.k)
-        ns = 1e9 if cfg.block_bits == 512 else advisor._model_probe_ns(cfg)
-        rows.append(dict(**key, m_bits=cfg.m_bits, ns=ns))
-    advisor.save_probe_table(rows)
-    fn, source = advisor.resolve_probe_cost(None)
-    assert source == "measured-table"
-    pick = advisor.suggest_config_cost(N, 1_000.0)  # no explicit table passed
-    assert pick.block_bits != 512
-    # explicit argument still wins over the persisted table
-    _, source = advisor.resolve_probe_cost({(64, 1, 1, 4): 1.0})
-    assert source == "explicit-table"
-
-
-def test_probe_table_roundtrip(tmp_path):
-    path = tmp_path / "t.json"
-    advisor.save_probe_table(
-        [dict(block_bits=64, sectors=1, zones=1, k=4, m_bits=1 << 21, ns=17.5)],
-        path=path)
-    table = advisor.load_probe_table(path)
-    assert table == {(64, 1, 1, 4, True): 17.5}  # True = cache-resident regime
-    # a cache-resident measurement must NOT price a memory-bound filter:
-    # the big-m config falls back to the fitted model
-    fn = advisor._table_cost_fn(table)
-    small = BloomConfig(m_bits=1 << 21, k=4, word_bits=64, words_per_block=1)
-    big = BloomConfig(m_bits=1 << 31, k=4, word_bits=64, words_per_block=1)
-    assert fn(small) == 17.5
-    assert fn(big) == advisor._model_probe_ns(big)
-    # unreadable/malformed -> None (model fallback), never raises
-    path.write_text("not json")
-    assert advisor.load_probe_table(path) is None
+        ns = 1e9 if cfg.block_bits == model_pick.block_bits else 1.0
+        rows.append(dict(block_bits=cfg.block_bits, sectors=cfg.sectors,
+                         zones=cfg.zones, k=cfg.k, m_bits=cfg.m_bits, ns=ns))
+    path.write_text(json.dumps({"rows": rows, "saved_at": time.time(),
+                                "host": "x", "host_fp": advisor.host_fingerprint()}))
+    assert advisor.resolve_probe_cost(None)[1] == "fitted-model"
+    assert advisor.suggest_config_cost(N, 5_000.0) == model_pick
 
 
 def test_measure_probe_ns_runs():
@@ -168,7 +141,7 @@ def test_calibration_remeasurement_refreshes_timestamp(tmp_path, monkeypatch):
     load_calibration then drops — the curve vanishes despite recent runs."""
     path = tmp_path / "calibration.json"
     monkeypatch.setenv(advisor.CALIBRATION_ENV, str(path))
-    old_ts = time.time() - 8 * 86400  # beyond PROBE_TABLE_MAX_AGE_S
+    old_ts = time.time() - 8 * 86400  # beyond CALIBRATION_MAX_AGE_S
     advisor.save_calibration([dict(**_geo64(), m_bits=1 << 20, ns=30.0,
                                    ts=old_ts)])
     assert advisor.load_calibration() is None  # stale on its own
@@ -258,14 +231,10 @@ def test_calibration_interpolation_and_fallback():
 
 
 def test_calibration_preferred_over_measured_table(tmp_path, monkeypatch):
-    """Source precedence: explicit > calibration-curve > measured-table >
-    fitted-model; and the curve actually steers the pick."""
-    monkeypatch.setenv(advisor.PROBE_TABLE_ENV, str(tmp_path / "pt.json"))
+    """Source precedence: explicit > calibration-curve > fitted-model; and
+    the curve actually steers the pick."""
     monkeypatch.setenv(advisor.CALIBRATION_ENV, str(tmp_path / "cal.json"))
     assert advisor.resolve_probe_cost(None)[1] == "fitted-model"
-    advisor.save_probe_table(
-        [dict(block_bits=64, sectors=1, zones=1, k=4, m_bits=1 << 21, ns=17.5)])
-    assert advisor.resolve_probe_cost(None)[1] == "measured-table"
     # calibration that makes every 512-bit-block geometry absurdly expensive
     points = []
     for cfg in advisor._candidate_configs(N):
@@ -319,8 +288,8 @@ def test_calibrate_sweep_smoke(tmp_path, monkeypatch):
     # corrupt spin-floor files degrade to the 0.0 sentinel, never abort a
     # multi-minute sweep
     monkeypatch.setattr(mod, "REPO", str(tmp_path))
-    bench_dir = tmp_path / "BENCH"
-    bench_dir.mkdir(exist_ok=True)
+    floor_dir = tmp_path / ".cache" / "bench"
+    floor_dir.mkdir(parents=True)
     for corrupt in ('{"spin_floor_ms": 0}', "[1, 2]", "not json"):
-        (bench_dir / "spin_floor.json").write_text(corrupt)
+        (floor_dir / "spin_floor.json").write_text(corrupt)
         assert mod._epoch_factor() == 0.0

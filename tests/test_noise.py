@@ -3,6 +3,7 @@ multi-tenant, so assertions must hold under arbitrary external load)."""
 
 from __future__ import annotations
 
+import json
 import os
 import sys
 import time
@@ -37,38 +38,26 @@ def test_spin_and_clean_ratio_sane():
     assert noise.clean_ratio(2) <= noise.clean_ratio(8) <= noise.clean_ratio(32)
 
 
-def test_pair_matched_rules():
-    sys.path.insert(0, os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "bench"))
-    import run_scaling as rs
-
-    ok_a = dict(epoch_factor=2.4, spin_post=1.0)
-    ok_b = dict(epoch_factor=2.3, spin_post=1.05)
-    assert rs.pair_matched(ok_a, ok_b)
-    # epoch flip between legs
-    assert not rs.pair_matched(ok_a, dict(epoch_factor=3.2, spin_post=1.0))
-    # mid-leg epoch flip visible in the post-spin
-    assert not rs.pair_matched(ok_a, dict(epoch_factor=2.35, spin_post=2.6))
-    assert not rs.pair_matched(dict(epoch_factor=2.4, spin_post=0.5), ok_b)
-    # legacy records without epoch fields fall back to the stored flag
-    assert rs.pair_matched(dict(epoch_matched=True), dict(epoch_matched=True))
-    assert not rs.pair_matched(dict(epoch_matched=True), dict())
-
-
 def test_read_spin_floor_formats(tmp_path):
-    """noise.read_spin_floor is THE single parser for spin_floor.json: both
-    the observation-list and legacy single-value formats parse; missing /
-    corrupt / non-positive files yield None (callers pick their fallback)."""
-    bench_dir = tmp_path / "BENCH"
-    bench_dir.mkdir()
-    f = bench_dir / "spin_floor.json"
-    f.write_text('{"spin_floor_ms": 20.5, "observations": [[1.0, 25.0], [2.0, 20.5]]}')
+    """noise.read_spin_floor is THE single reader of .cache/bench/spin_floor.json:
+    both the observation-list and legacy single-value formats parse, only
+    observations of the last 7 days count; missing / corrupt / non-positive
+    / aged-out files yield None (callers pick their fallback)."""
+    floor_dir = tmp_path / ".cache" / "bench"
+    floor_dir.mkdir(parents=True)
+    f = floor_dir / "spin_floor.json"
+    now = time.time()
+    aged = now - 8 * 86400
+    f.write_text(json.dumps({"spin_floor_ms": 10.0, "observations": [
+        [aged, 10.0], [now - 60, 25.0], [now, 20.5]]}))
     assert noise.read_spin_floor(str(tmp_path)) == 20.5
     f.write_text('{"spin_floor_ms": 33.0}')  # legacy single-value
     assert noise.read_spin_floor(str(tmp_path)) == 33.0
     for corrupt in ('{"spin_floor_ms": 0}', "[1, 2]", "not json", "{}",
                     '{"observations": [[]]}',        # malformed entry: o[1] raises IndexError
-                    '{"observations": [[1.0]]}'):    # ditto, one-element entry
+                    '{"observations": [[1.0]]}',     # ditto, one-element entry
+                    json.dumps({"spin_floor_ms": 10.0,
+                                "observations": [[aged, 10.0]]})):  # aged out
         f.write_text(corrupt)
         assert noise.read_spin_floor(str(tmp_path)) is None
     f.unlink()
