@@ -27,7 +27,6 @@ from __future__ import annotations
 
 import time
 from dataclasses import dataclass
-from functools import reduce
 from typing import Iterator
 
 import numpy as np
@@ -521,23 +520,15 @@ _MAX_CLOSURE_PATH_BYTES = 64 << 20
 def _merge_blob_rows(tbl: pa.Table) -> pa.Table:
     """Fold the partial rows of ONE (sketch, group) into one partial row.
     The only merge fold: the in-task pre-merge and every merge-tree level
-    call it, so the two cannot diverge. Deterministic: rows are folded in
-    part-id order (stable sort); extra input columns (the tree's
-    ``bucket``) are ignored."""
-    # sort indices, not Table.sort_by: sorting the table copies every blob
-    # (~250 ms for two 128 MiB partials on a 4-core Xeon host), and to_numpy
-    # takes half the time of to_pylist for the one copy that remains
+    call it, so the two cannot diverge. It hands the blobs, in part-id order
+    (stable sort), to the sketch's one n-ary ``merge_many_blobs``; extra
+    input columns (the tree's ``bucket``) are ignored."""
+    # sort indices, not Table.sort_by (sorting the table copies every blob),
+    # and each blob read as a zero-copy Arrow buffer, not a bytes copy
     order = pc.sort_indices(tbl.column("part")).to_numpy()
-    blobs = list(tbl.column("blob").to_numpy(zero_copy_only=False)[order])
-    name, _cfg, _ = blobmod.unpack(blobs[0])
-    module = MODULES[name]
-    # n-ary merge when the sketch provides one (kll/tdigest): concat-all +
-    # one compaction is permutation-invariant, so the merged bytes do not
-    # depend on partition numbering — the pairwise fold stays for the fully
-    # commutative monoids (bloom OR / hll max / cms add), where it is
-    merged = (module.merge_many_blobs(blobs)
-              if hasattr(module, "merge_many_blobs")
-              else reduce(module.merge_blobs, blobs))
+    col = tbl.column("blob")
+    blobs = [col[i].as_buffer() for i in order]
+    merged = MODULES[blobmod.unpack(blobs[0])[0]].merge_many_blobs(blobs)
     return pa.table({
         "sketch": [tbl.column("sketch")[0].as_py()],
         "group": [tbl.column("group")[0].as_py()],

@@ -324,10 +324,13 @@ def contains(tokens: np.ndarray, payload: np.ndarray, cfg: BloomConfig) -> np.nd
     return out
 
 
-def merge_payloads(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """OR-merge (A5): the commutative monoid that makes Spark partial/final
-    aggregation exact."""
-    return np.bitwise_or(a, b)
+def _fold(cfg: BloomConfig, payloads: list) -> np.ndarray:
+    """OR-merge (A5), accumulated in place into one buffer: the commutative
+    monoid that makes Spark partial/final aggregation exact."""
+    acc = np.frombuffer(payloads[0], dtype=np.uint8).copy()
+    for p in payloads[1:]:
+        np.bitwise_or(acc, np.frombuffer(p, dtype=np.uint8), out=acc)
+    return acc
 
 
 # --- blob-level conveniences -------------------------------------------------
@@ -336,25 +339,15 @@ def build_blob(tokens: np.ndarray, cfg: BloomConfig) -> bytes:
     return build(tokens, cfg)
 
 
+def merge_many_blobs(blobs: list[bytes]) -> bytes:
+    return blobmod.merge("bloom", blobs, _fold)
+
+
 def merge_blobs(a: bytes, b: bytes) -> bytes:
-    na, ca, pa = blobmod.unpack(a)
-    nb, cb, pb = blobmod.unpack(b)
-    if na != "bloom" or nb != "bloom":
-        raise SketchConfigError("merge_blobs: not bloom blobs")
-    ca.require_same(cb)
-    merged = merge_payloads(np.frombuffer(pa, dtype=np.uint8), np.frombuffer(pb, dtype=np.uint8))
-    return blobmod.pack("bloom", ca, merged.tobytes())
+    return merge_many_blobs([a, b])
 
 
 def contains_blob(tokens: np.ndarray, blob: bytes) -> np.ndarray:
-    name, cfg, payload = blobmod.unpack(blob)
-    if name != "bloom":
-        raise SketchConfigError("contains_blob: not a bloom blob")
+    _, cfg, payload = blobmod.unpack(blob, "bloom")
     return contains(tokens, np.frombuffer(payload, dtype=np.uint8), cfg)
 
-
-def fill_ratio(blob: bytes) -> float:
-    """Fraction of set bits — cheap sanity metric recorded in lineage."""
-    _, cfg, payload = blobmod.unpack(blob)
-    arr = np.frombuffer(payload, dtype=np.uint8)
-    return float(np.unpackbits(arr).sum()) / cfg.m_bits

@@ -144,17 +144,6 @@ def new_builder(cfg: CMSConfig) -> CMSBuilder:
     return CMSBuilder(cfg)
 
 
-def merge_payloads(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """Saturating add, matching merge_blobs: narrow unsigned counters clamp
-    at the dtype max (== cfg.counter_max) instead of wrapping. min(cap, a+b)
-    is commutative and associative, so any merge grouping agrees."""
-    if a.dtype == np.int64:
-        return a + b
-    wide = a.astype(np.int64) + b
-    np.minimum(wide, np.iinfo(a.dtype).max, out=wide)
-    return wide.astype(a.dtype)
-
-
 def build_blob(values: np.ndarray, cfg: CMSConfig) -> bytes:
     c = empty(cfg)
     (insert_cu if cfg.conservative else insert)(c, values, cfg)
@@ -166,33 +155,37 @@ def _payload_to_counters(cfg: CMSConfig, payload: bytes) -> np.ndarray:
         cfg.depth, cfg.width)
 
 
-def merge_blobs(a: bytes, b: bytes) -> bytes:
-    na, ca, pa = blobmod.unpack(a)
-    nb, cb, pb = blobmod.unpack(b)
-    if na != "cms" or nb != "cms":
-        raise SketchConfigError("merge_blobs: not cms blobs")
-    if getattr(ca, "conservative", False) or getattr(cb, "conservative", False):
+def _fold(cfg: CMSConfig, payloads: list) -> np.ndarray:
+    """Elementwise add, accumulated in place in int64. Narrow unsigned
+    counters saturate at ``cfg.counter_max`` instead of wrapping:
+    min(cap, a+b+...) is commutative and associative (addition saturates
+    upward), so any merge grouping gives the same bytes."""
+    if cfg.conservative:
         raise SketchConfigError(
             "conservative-update CMS blobs are not mergeable: CU's tightened "
             "estimates do not survive partial addition — build CU sketches in "
             "one pass (cms.build_blob) for the query path, or use the default "
             "plain-update config for distributed builds"
         )
-    ca.require_same(cb)
-    ca_counters = _payload_to_counters(ca, pa)
-    merged = ca_counters.astype(np.int64) + _payload_to_counters(cb, pb)
-    if ca.counter_bits != 64:
-        # saturating merge: commutative and associative (min(cap, a+b) folds
-        # the same under any grouping because addition saturates upward)
-        np.minimum(merged, ca.counter_max, out=merged)
-        merged = merged.astype(ca_counters.dtype)
-    return blobmod.pack("cms", ca, merged.tobytes())
+    acc = _payload_to_counters(cfg, payloads[0]).astype(np.int64)
+    for p in payloads[1:]:
+        acc += _payload_to_counters(cfg, p)
+    if cfg.counter_bits == 64:
+        return acc
+    np.minimum(acc, cfg.counter_max, out=acc)
+    return acc.astype(_DTYPES[cfg.counter_bits])
+
+
+def merge_many_blobs(blobs: list[bytes]) -> bytes:
+    return blobmod.merge("cms", blobs, _fold)
+
+
+def merge_blobs(a: bytes, b: bytes) -> bytes:
+    return merge_many_blobs([a, b])
 
 
 def query_blob(values: np.ndarray, blob: bytes) -> np.ndarray:
-    name, cfg, payload = blobmod.unpack(blob)
-    if name != "cms":
-        raise SketchConfigError("query_blob: not a cms blob")
+    _, cfg, payload = blobmod.unpack(blob, "cms")
     return query(_payload_to_counters(cfg, payload), values, cfg)
 
 
@@ -202,10 +195,8 @@ def total_blob(blob: bytes) -> int:
     the row sum undercounts true N — exact only below the saturation cap
     (always exact for the 64-bit default). Refused for conservative-update
     blobs: CU raises cells to a max rather than adding, so no row sums to N."""
-    name, cfg, payload = blobmod.unpack(blob)
-    if name != "cms":
-        raise SketchConfigError("total_blob: not a cms blob")
-    if getattr(cfg, "conservative", False):
+    _, cfg, payload = blobmod.unpack(blob, "cms")
+    if cfg.conservative:
         raise SketchConfigError(
             "total_blob is undefined for conservative-update CMS (row sums "
             "are not N under CU); track N exactly alongside the sketch")

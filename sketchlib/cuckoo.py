@@ -30,6 +30,7 @@ import json
 
 import numpy as np
 
+from sketchlib import blob as blobmod
 from sketchlib.config import SketchConfigError, _Cfg
 from sketchlib.hashing import splitmix64
 
@@ -218,14 +219,12 @@ class CuckooFilter:
         return len(head).to_bytes(4, "little") + head + self.table.tobytes()
 
     def to_blob(self) -> bytes:
-        from sketchlib import blob as blobmod
-
         return blobmod.pack("cuckoo", self.cfg, self.to_payload())
 
     @classmethod
-    def from_payload(cls, cfg: CuckooConfig, payload: bytes) -> "CuckooFilter":
+    def from_payload(cls, cfg: CuckooConfig, payload) -> "CuckooFilter":
         hlen = int.from_bytes(payload[:4], "little")
-        meta = json.loads(payload[4 : 4 + hlen])
+        meta = json.loads(bytes(payload[4 : 4 + hlen]))
         out = cls(cfg)
         out.table = (
             np.frombuffer(payload[4 + hlen :], dtype=np.uint16)
@@ -236,11 +235,7 @@ class CuckooFilter:
 
     @classmethod
     def from_blob(cls, blob: bytes) -> "CuckooFilter":
-        from sketchlib import blob as blobmod
-
-        name, cfg, payload = blobmod.unpack(blob)
-        if name != "cuckoo":
-            raise SketchConfigError("not a cuckoo blob")
+        _, cfg, payload = blobmod.unpack(blob, "cuckoo")
         return cls.from_payload(cfg, payload)
 
 
@@ -290,8 +285,21 @@ def new_builder(cfg: CuckooConfig) -> CuckooBuilder:
     return CuckooBuilder(cfg)
 
 
+def _fold(cfg: CuckooConfig, payloads: list) -> bytes:
+    """Set-union of the filters in input order (``CuckooFilter.merge``). The
+    union's bytes depend on that order, its membership does not."""
+    out = CuckooFilter.from_payload(cfg, payloads[0])
+    for p in payloads[1:]:
+        out = out.merge(CuckooFilter.from_payload(cfg, p))
+    return out.to_payload()
+
+
+def merge_many_blobs(blobs: list[bytes]) -> bytes:
+    return blobmod.merge("cuckoo", blobs, _fold)
+
+
 def merge_blobs(a: bytes, b: bytes) -> bytes:
-    return CuckooFilter.from_blob(a).merge(CuckooFilter.from_blob(b)).to_blob()
+    return merge_many_blobs([a, b])
 
 
 def contains_blob(keys: np.ndarray, blob: bytes) -> np.ndarray:

@@ -104,13 +104,14 @@ def _encode(idx_or_regs, rank, m: int) -> bytes:
     return bytes([_DENSE]) + regs.tobytes()
 
 
-def decode_registers(payload: bytes, p: int) -> np.ndarray:
-    """Payload (either mode) -> dense uint8 register array. Corrupt payloads
-    raise ``SketchConfigError`` rather than returning a wrong-size register
-    array (which would silently skew every downstream estimate) or a bare
+def _max_into(regs: np.ndarray, payload) -> None:
+    """``regs = max(regs, registers of payload)`` in place, for a payload of
+    either mode read where it lies. Corrupt payloads raise
+    ``SketchConfigError`` rather than merging a wrong-size register array
+    (which would silently skew every downstream estimate) or raising a bare
     ``IndexError``."""
-    m = 1 << p
-    if not payload:
+    m = regs.size
+    if not len(payload):
         raise SketchConfigError("empty hll payload")
     mode = payload[0]
     body = payload[1:]
@@ -118,26 +119,27 @@ def decode_registers(payload: bytes, p: int) -> np.ndarray:
         if len(body) != m:
             raise SketchConfigError(
                 f"hll dense payload has {len(body)} registers, config says {m}")
-        return np.frombuffer(body, dtype=np.uint8).copy()
+        np.maximum(regs, np.frombuffer(body, dtype=np.uint8), out=regs)
+        return
     if mode != _SPARSE:
         raise SketchConfigError(f"unknown hll payload mode {mode}")
-    n = int.from_bytes(body[:4], "little")
-    if len(body) < 4 + 5 * n:
-        raise SketchConfigError(
-            f"hll sparse payload truncated: {n} pairs declared, "
-            f"{len(body) - 4} body bytes")
-    idx = np.frombuffer(body[4 : 4 + 4 * n], dtype="<i4").astype(np.int64)
-    rank = np.frombuffer(body[4 + 4 * n : 4 + 5 * n], dtype=np.uint8)
+    idx, rank = _decode_pairs(payload)
     if idx.size and (int(idx.min()) < 0 or int(idx.max()) >= m):
         raise SketchConfigError("hll sparse payload has out-of-range register index")
-    regs = np.zeros(m, dtype=np.uint8)
-    regs[idx] = rank
+    regs[idx] = np.maximum(regs[idx], rank)
+
+
+def decode_registers(payload, p: int) -> np.ndarray:
+    """Payload (either mode) -> dense uint8 register array."""
+    regs = np.zeros(1 << p, dtype=np.uint8)
+    _max_into(regs, payload)
     return regs
 
 
-def _decode_pairs(payload: bytes) -> tuple[np.ndarray, np.ndarray] | None:
-    """Sparse payload -> (idx, rank); None when dense."""
-    if payload[0] != _SPARSE:
+def _decode_pairs(payload) -> tuple[np.ndarray, np.ndarray] | None:
+    """Sparse payload -> (idx, rank); None for any other (``_max_into``
+    reports empty and unknown-mode payloads)."""
+    if not len(payload) or payload[0] != _SPARSE:
         return None
     body = payload[1:]
     n = int.from_bytes(body[:4], "little")
@@ -201,11 +203,6 @@ def new_builder(cfg: HLLConfig) -> HLLBuilder:
     return HLLBuilder(cfg)
 
 
-def merge_payloads(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """Dense register merge (kept for kernel-level callers/tests)."""
-    return np.maximum(a, b)
-
-
 def estimate_registers(regs: np.ndarray, p: int) -> float:
     m = 1 << p
     inv = np.ldexp(1.0, -regs.astype(np.int64))
@@ -222,28 +219,34 @@ def build_blob(values: np.ndarray, cfg: HLLConfig) -> bytes:
     return blobmod.pack("hll", cfg, b.to_payload())
 
 
-def merge_blobs(a: bytes, b: bytes) -> bytes:
-    na, ca, pa = blobmod.unpack(a)
-    nb, cb, pb = blobmod.unpack(b)
-    if na != "hll" or nb != "hll":
-        raise SketchConfigError("merge_blobs: not hll blobs")
-    ca.require_same(cb)
-    sa, sb = _decode_pairs(pa), _decode_pairs(pb)
-    if sa is not None and sb is not None:
+def _fold(cfg: HLLConfig, payloads: list) -> bytes:
+    """Register max. All-sparse inputs union their pairs (the merged
+    register count decides the output mode); otherwise every payload is
+    max-ed in place into one dense register array. Both encodings are a
+    pure function of the merged registers, so any merge order/shape yields
+    the same bytes."""
+    pairs = [_decode_pairs(p) for p in payloads]
+    if all(s is not None for s in pairs):
         idx, rank = _consolidate_pairs(
-            np.concatenate([sa[0], sb[0]]), np.concatenate([sa[1], sb[1]])
+            np.concatenate([s[0] for s in pairs]), np.concatenate([s[1] for s in pairs])
         )
-        payload = _encode(idx, rank, ca.m)
-    else:
-        merged = np.maximum(decode_registers(pa, ca.p), decode_registers(pb, cb.p))
-        payload = _encode(merged, None, ca.m)
-    return blobmod.pack("hll", ca, payload)
+        return _encode(idx, rank, cfg.m)
+    regs = empty(cfg)
+    for p in payloads:
+        _max_into(regs, p)
+    return _encode(regs, None, cfg.m)
+
+
+def merge_many_blobs(blobs: list[bytes]) -> bytes:
+    return blobmod.merge("hll", blobs, _fold)
+
+
+def merge_blobs(a: bytes, b: bytes) -> bytes:
+    return merge_many_blobs([a, b])
 
 
 def estimate_blob(blob: bytes) -> float:
-    name, cfg, payload = blobmod.unpack(blob)
-    if name != "hll":
-        raise SketchConfigError("estimate_blob: not an hll blob")
+    _, cfg, payload = blobmod.unpack(blob, "hll")
     return estimate_registers(decode_registers(payload, cfg.p), cfg.p)
 
 

@@ -11,11 +11,12 @@ Level capacities follow the (2/3)-geometric schedule. Compaction coins are
 pure function of the input multiset — this is the "seeded" determinism
 contract that T4's permutation tests rely on.
 
-Merge is **lazy**: level-wise concatenation (a commutative, associative
-multiset union → estimates identical under any merge order/shape), with a
-deterministic compaction guard once a level exceeds ``lazy_factor * k`` items
-so a 1000-partition tree merge stays bounded (~k * lazy_factor * levels
-floats, a few MB at defaults).
+Merge is **lazy** and n-ary — one merge, ``merge_many_blobs``, of which
+``merge_blobs(a, b)`` is the two-input case: level-wise concatenation of all
+inputs (a commutative, associative multiset union → estimates identical under
+any merge order/shape), then one deterministic compaction guard pass for
+levels over ``lazy_factor * k`` items, so a 1000-partition tree merge stays
+bounded (~k * lazy_factor * levels floats, a few MB at defaults).
 
 Payload: ``<u8 n_total, <u4 n_levels, <u8 counts[n_levels], f8 items...``.
 """
@@ -120,21 +121,6 @@ class KLL:
                 [self.levels[target + 1], promoted]
             )
 
-    def merge(self, other: "KLL") -> "KLL":
-        self.cfg.require_same(other.cfg)
-        self._flush()
-        other._flush()
-        out = KLL(self.cfg)
-        out.n = self.n + other.n
-        H = max(len(self.levels), len(other.levels))
-        for h in range(H):
-            a = self.levels[h] if h < len(self.levels) else np.empty(0)
-            b = other.levels[h] if h < len(other.levels) else np.empty(0)
-            out.levels.append(np.concatenate([a, b]))
-        del out.levels[0]
-        out._compress(force=False)  # lazy guard only
-        return out
-
     # -- estimation ----------------------------------------------------------
 
     def _weighted_items(self) -> tuple[np.ndarray, np.ndarray]:
@@ -228,36 +214,15 @@ def build_blob(values: np.ndarray, cfg: KLLConfig) -> bytes:
     return blobmod.pack("kll", cfg, s.to_payload())
 
 
-def merge_blobs(a: bytes, b: bytes) -> bytes:
-    na, ca, pa = blobmod.unpack(a)
-    nb, cb, pb = blobmod.unpack(b)
-    if na != "kll" or nb != "kll":
-        raise SketchConfigError("merge_blobs: not kll blobs")
-    ca.require_same(cb)
-    merged = KLL.from_payload(ca, pa).merge(KLL.from_payload(cb, pb))
-    return blobmod.pack("kll", ca, merged.to_payload())
-
-
-def merge_many_blobs(blobs: list[bytes]) -> bytes:
-    """N-ary merge: level-wise concat of ALL inputs, then ONE lazy-guard
-    compaction pass. Because the concatenated level multisets are unions
-    (order-free) and compaction + serialization are pure functions of the
-    multisets, the result is byte-identical under ANY permutation of
-    ``blobs`` — unlike a pairwise fold, where the guard can fire at
-    different accumulation points. agg._merge_blob_rows uses this so the two
-    build engines (physical-partition ids vs file indices) merge to the
-    same bytes."""
-    states = []
-    cfg = None
-    for b in blobs:
-        name, c, payload = blobmod.unpack(b)
-        if name != "kll":
-            raise SketchConfigError("merge_many_blobs: not kll blobs")
-        if cfg is None:
-            cfg = c
-        else:
-            cfg.require_same(c)
-        states.append(KLL.from_payload(c, payload))
+def _fold(cfg: KLLConfig, payloads: list) -> bytes:
+    """Level-wise concat of ALL inputs, then ONE lazy-guard compaction pass.
+    The concatenated level multisets are unions (order-free) and compaction
+    + serialization are pure functions of the multisets, so the result is
+    byte-identical under ANY permutation of the inputs — which a fold of
+    pairwise merges would not be, since the guard could fire at different
+    accumulation points. This is what lets the two build engines
+    (physical-partition ids vs file indices) merge to the same bytes."""
+    states = [KLL.from_payload(cfg, p) for p in payloads]
     out = KLL(cfg)
     out.n = sum(s.n for s in states)
     H = max(len(s.levels) for s in states)
@@ -267,11 +232,17 @@ def merge_many_blobs(blobs: list[bytes]) -> bytes:
         for h in range(H)
     ]
     out._compress(force=False)
-    return blobmod.pack("kll", cfg, out.to_payload())
+    return out.to_payload()
+
+
+def merge_many_blobs(blobs: list[bytes]) -> bytes:
+    return blobmod.merge("kll", blobs, _fold)
+
+
+def merge_blobs(a: bytes, b: bytes) -> bytes:
+    return merge_many_blobs([a, b])
 
 
 def quantiles_blob(blob: bytes, qs) -> np.ndarray:
-    name, cfg, payload = blobmod.unpack(blob)
-    if name != "kll":
-        raise SketchConfigError("quantiles_blob: not a kll blob")
+    _, cfg, payload = blobmod.unpack(blob, "kll")
     return KLL.from_payload(cfg, payload).quantiles(qs)

@@ -19,7 +19,7 @@ from __future__ import annotations
 import numpy as np
 
 from sketchlib import blob as blobmod
-from sketchlib.config import MinHashConfig, SketchConfigError
+from sketchlib.config import MinHashConfig
 from sketchlib.hashing import splitmix64
 
 _U64MAX = np.uint64(0xFFFFFFFFFFFFFFFF)
@@ -107,31 +107,6 @@ def signatures_segmented_oph(
     return out
 
 
-def signatures_segmented(
-    flat_values: np.ndarray, starts: np.ndarray, cfg: MinHashConfig
-) -> np.ndarray:
-    """Per-document signatures: (n_docs, num_perm) uint64 from a flat value
-    array segmented at ``starts`` (np.minimum.reduceat per permutation).
-    Empty segments get U64MAX slots."""
-    n_docs = starts.size
-    out = np.full((n_docs, cfg.num_perm), _U64MAX, dtype=np.uint64)
-    if flat_values.size == 0 or n_docs == 0:
-        return out
-    h = splitmix64(flat_values, seed=cfg.hash_seed)
-    consts = _perm_constants(cfg.num_perm, cfg.hash_seed)
-    # reduceat quirk: empty segments (starts[i] == starts[i+1]) return the
-    # element at starts[i]; mask them back to U64MAX afterwards.
-    seg_len = np.diff(np.r_[starts, flat_values.size])
-    empty_seg = seg_len == 0
-    safe_starts = np.minimum(starts, flat_values.size - 1)
-    with np.errstate(over="ignore"):
-        for j in range(cfg.num_perm):
-            mins = np.minimum.reduceat(h * consts[j], safe_starts)
-            mins[empty_seg] = _U64MAX
-            out[:, j] = mins
-    return out
-
-
 class MinHashBuilder:
     __slots__ = ("cfg", "sig")
     supports_unique = True  # set semantics
@@ -154,10 +129,6 @@ def new_builder(cfg: MinHashConfig) -> MinHashBuilder:
     return MinHashBuilder(cfg)
 
 
-def merge_payloads(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    return np.minimum(a, b)
-
-
 def jaccard(sig_a: np.ndarray, sig_b: np.ndarray) -> float:
     return float(np.mean(sig_a == sig_b))
 
@@ -168,20 +139,24 @@ def build_blob(values: np.ndarray, cfg: MinHashConfig) -> bytes:
     return blobmod.pack("minhash", cfg, sig.tobytes())
 
 
+def _fold(cfg: MinHashConfig, payloads: list) -> np.ndarray:
+    """Slot-wise min, accumulated in place into one signature."""
+    acc = np.frombuffer(payloads[0], dtype=np.uint64).copy()
+    for p in payloads[1:]:
+        np.minimum(acc, np.frombuffer(p, dtype=np.uint64), out=acc)
+    return acc
+
+
+def merge_many_blobs(blobs: list[bytes]) -> bytes:
+    return blobmod.merge("minhash", blobs, _fold)
+
+
 def merge_blobs(a: bytes, b: bytes) -> bytes:
-    na, ca, pa = blobmod.unpack(a)
-    nb, cb, pb = blobmod.unpack(b)
-    if na != "minhash" or nb != "minhash":
-        raise SketchConfigError("merge_blobs: not minhash blobs")
-    ca.require_same(cb)
-    merged = np.minimum(
-        np.frombuffer(pa, dtype=np.uint64), np.frombuffer(pb, dtype=np.uint64)
-    )
-    return blobmod.pack("minhash", ca, merged.tobytes())
+    return merge_many_blobs([a, b])
 
 
 def jaccard_blobs(a: bytes, b: bytes) -> float:
-    na, ca, pa = blobmod.unpack(a)
-    nb, cb, pb = blobmod.unpack(b)
+    _, ca, pa = blobmod.unpack(a, "minhash")
+    _, cb, pb = blobmod.unpack(b, "minhash")
     ca.require_same(cb)
     return jaccard(np.frombuffer(pa, dtype=np.uint64), np.frombuffer(pb, dtype=np.uint64))

@@ -35,12 +35,12 @@ def _coalesce_for_probe(df: DataFrame) -> DataFrame:
     one wave. coalesce() is a narrow dependency: no shuffle, no row movement
     across workers beyond task packing, so results are unchanged.
 
-    Chained probes (df already the output of a probe in this plan) skip the
-    check: the input is already packed, a withColumn cannot change the
+    Chained probes (df is directly the output of a probe) skip the check: it
+    was already made on the probe's input, a withColumn cannot change the
     partitioning, and the ``df.rdd`` partition-count read below forces a
     fresh physical planning pass (~60-90 ms of driver time PER CALL on a
     growing plan — measured 1.6 s for a 9-probe chain)."""
-    if getattr(df, "_sketchlib_probe_coalesced", False):
+    if getattr(df, "_sketchlib_coalesce_checked", False):
         return df
     try:
         current = df.rdd.getNumPartitions()
@@ -94,7 +94,10 @@ def _append_col_map(df: DataFrame, blob: bytes, col: str, out: str, kernel, out_
     type_str = {pa.bool_(): "boolean", pa.int64(): "bigint", pa.float64(): "double"}[out_type]
     probe_udf = F.arrow_udf(probe, type_str)
     res = df.withColumn(out, probe_udf(F.col(col)))
-    res._sketchlib_probe_coalesced = True  # chained probes skip re-planning
+    # "coalesce check done" (whether or not it coalesced): a plain Python
+    # attribute, so any transformation between two probes drops it by design
+    # and the next probe pays the check again
+    res._sketchlib_coalesce_checked = True
     return res
 
 
@@ -103,9 +106,7 @@ def with_bloom_membership(df: DataFrame, blob: bytes, col: str, out: str = "memb
     """Boolean membership column. Guarantee: never false for inserted keys
     (zero false negatives); true-rate on absent keys = the analytic FPR.
     For array columns ``array_mode`` picks ALL-tokens vs ANY-token semantics."""
-    name, _, _ = blobmod.unpack(blob)
-    if name != "bloom":
-        raise SketchConfigError("expected a bloom blob")
+    blobmod.unpack(blob, "bloom")
     if array_mode not in ("all", "any"):
         raise SketchConfigError("array_mode must be 'all' or 'any'")
     return _append_col_map(df, blob, col, out, bloom.contains_blob, pa.bool_(), array_mode)
@@ -116,9 +117,7 @@ def with_cuckoo_membership(df: DataFrame, blob: bytes, col: str, out: str = "mem
     """Boolean membership column against a cuckoo filter blob — zero false
     negatives for inserted keys, FPR ~ 2*bucket_size/2^bits_per_tag
     ([FAN14] §3.1). Same column semantics as the Bloom probe."""
-    name, _, _ = blobmod.unpack(blob)
-    if name != "cuckoo":
-        raise SketchConfigError("expected a cuckoo blob")
+    blobmod.unpack(blob, "cuckoo")
     if array_mode not in ("all", "any"):
         raise SketchConfigError("array_mode must be 'all' or 'any'")
     return _append_col_map(df, blob, col, out, cuckoo.contains_blob, pa.bool_(), array_mode)
@@ -126,21 +125,17 @@ def with_cuckoo_membership(df: DataFrame, blob: bytes, col: str, out: str = "mem
 
 def with_cms_count(df: DataFrame, blob: bytes, col: str, out: str = "est_count") -> DataFrame:
     """Point-estimate count column (est >= true; est <= true + eps*N w.p. 1-delta)."""
-    name, _, _ = blobmod.unpack(blob)
-    if name != "cms":
-        raise SketchConfigError("expected a cms blob")
+    blobmod.unpack(blob, "cms")
     return _append_col_map(df, blob, col, out, cms.query_blob, pa.int64())
 
 
 def with_kll_rank(df: DataFrame, blob: bytes, col: str, out: str = "est_rank") -> DataFrame:
     """Estimated normalized rank of each value under the sketched distribution."""
-    name, cfg, payload = blobmod.unpack(blob)
-    if name != "kll":
-        raise SketchConfigError("expected a kll blob")
+    blobmod.unpack(blob, "kll")
 
     def kernel(values, b):
-        n2, c2, p2 = blobmod.unpack(b)
-        return kll.KLL.from_payload(c2, p2).rank(values)
+        _, cfg, payload = blobmod.unpack(b)
+        return kll.KLL.from_payload(cfg, payload).rank(values)
 
     return _append_col_map(df, blob, col, out, kernel, pa.float64())
 

@@ -206,14 +206,11 @@ def embedding_near_duplicates(
     )
     # materialize the signature pass once: every branch below (bucket-size
     # aggregate, capped table, both verify sides) would otherwise re-run the
-    # scan + python signature stage. Same small/large policy as the
-    # MinHash-LSH path: provably small inputs eager-checkpoint and broadcast
-    # the verify sides; large corpora cache (lineage retained) and keep
-    # shuffle joins.
-    from sketchlib.textops import _SMALL_INPUT_BYTES, _plan_size_bytes
+    # scan + python signature stage. Provably small inputs also broadcast
+    # the verify sides; large corpora keep shuffle joins.
+    from sketchlib.textops import _materialize
 
-    small = _plan_size_bytes(df.select(id_col, vec_col)) <= _SMALL_INPUT_BYTES
-    signed = signed.localCheckpoint(eager=True) if small else signed.cache()
+    signed, small = _materialize(signed, df.select(id_col, vec_col))
     stacked = signed.select(
         id_col, vec_col,
         F.explode(F.array(*[

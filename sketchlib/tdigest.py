@@ -11,6 +11,8 @@ each item's mid-quantile q, assign cluster id = floor(k1(q)) with
 per cluster with ``np.bincount``. Deterministic given the input multiset
 (sort first), so merge = centroid-list concat is order-insensitive and the
 final estimate-time recompression is permutation-invariant (T4 contract).
+One merge, n-ary: ``merge_many_blobs`` (``merge_blobs(a, b)`` is its
+two-input case) concatenates all inputs and compresses at most once.
 
 Payload: ``<u8 n_total`` + interleaved ``(mean: f8, weight: f8)`` centroids.
 """
@@ -93,18 +95,6 @@ class TDigest:
             self._pending_size = 0
             self._ingest(buf)
 
-    def merge(self, other: "TDigest") -> "TDigest":
-        self.cfg.require_same(other.cfg)
-        self._flush()
-        other._flush()
-        out = TDigest(self.cfg)
-        out.n = self.n + other.n
-        out.means = np.concatenate([self.means, other.means])
-        out.weights = np.concatenate([self.weights, other.weights])
-        if out.means.size > self.cfg.max_centroids:  # lazy guard for wide merges
-            out.means, out.weights = compress(out.means, out.weights, self.cfg.compression)
-        return out
-
     def quantiles(self, qs) -> np.ndarray:
         self._flush()
         qs = np.asarray(qs, dtype=np.float64)
@@ -155,46 +145,29 @@ def build_blob(values: np.ndarray, cfg: TDigestConfig) -> bytes:
     return blobmod.pack("tdigest", cfg, t.to_payload())
 
 
-def merge_blobs(a: bytes, b: bytes) -> bytes:
-    na, ca, pa = blobmod.unpack(a)
-    nb, cb, pb = blobmod.unpack(b)
-    if na != "tdigest" or nb != "tdigest":
-        raise SketchConfigError("merge_blobs: not tdigest blobs")
-    ca.require_same(cb)
-    merged = TDigest.from_payload(ca, pa).merge(TDigest.from_payload(cb, pb))
-    return blobmod.pack("tdigest", ca, merged.to_payload())
+def _fold(cfg: TDigestConfig, payloads: list) -> bytes:
+    """Concat ALL centroid lists, then at most one multiset-deterministic
+    compress: byte-identical under any permutation of the inputs (a fold of
+    pairwise merges could hit the ``max_centroids`` guard at order-dependent
+    points). See ``kll._fold``."""
+    states = [TDigest.from_payload(cfg, p) for p in payloads]
+    out = TDigest(cfg)
+    out.n = sum(s.n for s in states)
+    out.means = np.concatenate([s.means for s in states])
+    out.weights = np.concatenate([s.weights for s in states])
+    if out.means.size > cfg.max_centroids:  # lazy guard for wide merges
+        out.means, out.weights = compress(out.means, out.weights, cfg.compression)
+    return out.to_payload()
 
 
 def merge_many_blobs(blobs: list[bytes]) -> bytes:
-    """N-ary merge: concat ALL centroid lists, then at most one
-    multiset-deterministic compress — byte-identical under any permutation
-    of ``blobs`` (a pairwise fold can hit the max_centroids guard at
-    order-dependent points). See kll.merge_many_blobs."""
-    means, weights, n = [], [], 0
-    cfg = None
-    for b in blobs:
-        name, c, payload = blobmod.unpack(b)
-        if name != "tdigest":
-            raise SketchConfigError("merge_many_blobs: not tdigest blobs")
-        if cfg is None:
-            cfg = c
-        else:
-            cfg.require_same(c)
-        st = TDigest.from_payload(c, payload)
-        means.append(st.means)
-        weights.append(st.weights)
-        n += st.n
-    out = TDigest(cfg)
-    out.n = n
-    out.means = np.concatenate(means)
-    out.weights = np.concatenate(weights)
-    if out.means.size > cfg.max_centroids:
-        out.means, out.weights = compress(out.means, out.weights, cfg.compression)
-    return blobmod.pack("tdigest", cfg, out.to_payload())
+    return blobmod.merge("tdigest", blobs, _fold)
+
+
+def merge_blobs(a: bytes, b: bytes) -> bytes:
+    return merge_many_blobs([a, b])
 
 
 def quantiles_blob(blob: bytes, qs) -> np.ndarray:
-    name, cfg, payload = blobmod.unpack(blob)
-    if name != "tdigest":
-        raise SketchConfigError("quantiles_blob: not a tdigest blob")
+    _, cfg, payload = blobmod.unpack(blob, "tdigest")
     return TDigest.from_payload(cfg, payload).quantiles(qs)

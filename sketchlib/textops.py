@@ -140,16 +140,13 @@ def _shingle_hashes(word_h: np.ndarray, starts: np.ndarray, n: int) -> tuple[np.
 
 def minhash_signatures(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    num_perm: int = 128, shingle_n: int = 3, scheme: str = "oph",
+    num_perm: int = 128, shingle_n: int = 3,
 ) -> DataFrame:
-    """(id, signature array<bigint>) — per-doc MinHash over word n-shingles.
-
-    ``scheme="oph"`` (default): one-permutation hashing with optimal
-    densification — one hash pass + one sort per batch, ~num_perm x faster
-    than ``"kperm"`` (classic k independent permutations). Signatures from
-    different schemes are NOT comparable with each other."""
+    """(id, signature array<bigint>) — per-doc MinHash over word n-shingles,
+    by one-permutation hashing with optimal densification
+    (``minhash.signatures_segmented_oph``): one hash pass + one sort per
+    batch."""
     cfg = MinHashConfig(num_perm=num_perm)
-    sig_fn = mh.signatures_segmented_oph if scheme == "oph" else mh.signatures_segmented
     in_fields = [(id_col, df.schema[id_col].dataType.simpleString())]
     schema = ", ".join(f"{n} {t}" for n, t in in_fields) + ", signature array<bigint>"
 
@@ -159,7 +156,7 @@ def minhash_signatures(
             ids = batch.column(id_col)
             wh, starts = _word_hashes(texts)
             sh, sstarts = _shingle_hashes(wh, starts.astype(np.int64), shingle_n)
-            sigs = sig_fn(sh, sstarts, cfg)
+            sigs = mh.signatures_segmented_oph(sh, sstarts, cfg)
             sig_i64 = sigs.view(np.int64)  # reinterpret for Spark bigint
             arr = pa.FixedSizeListArray.from_arrays(
                 pa.array(sig_i64.ravel(), type=pa.int64()), cfg.num_perm
@@ -249,8 +246,8 @@ def lsh_candidate_pairs(
     )
 
 
-# inputs whose Catalyst size estimate is below this are "small": signature
-# recomputation per plan branch is cheaper than a cache barrier, and the
+# inputs whose Catalyst size estimate is below this are "small": a table
+# derived from them is eagerly checkpointed (``_materialize``), and the
 # signature table provably fits a broadcast (estimate is the raw text bytes;
 # 128-slot signatures are within ~4x of 300-byte docs). Large corpora keep
 # the cache + shuffle joins — the 100 TB shape.
@@ -265,6 +262,20 @@ def _plan_size_bytes(df: DataFrame) -> int:
         return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     except Exception:
         return 1 << 62
+
+
+def _materialize(df: DataFrame, gate_df: DataFrame) -> tuple[DataFrame, bool]:
+    """The one materialization policy for a table that several plan branches
+    read; returns ``(materialized df, small)``. ``small`` is whether
+    ``gate_df`` (the input columns ``df`` derives from) is provably small by
+    its plan size estimate (no job). A small input is eagerly
+    localCheckpointed: materialized ONCE in block storage (no columnar cache
+    encode, no multi-branch materialization race, lineage truncated so AQE
+    replans a smaller tree — measured -0.4 s cold on the MinHash-LSH path).
+    Larger inputs are cache()d, whose retained lineage recomputes lost
+    partitions on executor failure."""
+    small = _plan_size_bytes(gate_df) <= _SMALL_INPUT_BYTES
+    return (df.localCheckpoint(eager=True) if small else df.cache()), small
 
 
 def _verify_candidate_pairs(
@@ -310,24 +321,18 @@ def minhash_near_duplicates(
     rows_per_band = num_perm // bands
     # size-adaptive join strategy (plan stats, no job): a provably small
     # input broadcasts the signature table into the verification joins;
-    # large corpora keep the shuffle joins. (Skipping the cache for small
-    # inputs was measured SLOWER — 3 recomputed scan+signature branches cost
-    # more than the one cache barrier — so the cache is unconditional.)
-    small = _plan_size_bytes(df.select(id_col, text_col)) <= _SMALL_INPUT_BYTES
-    sigs = minhash_signatures(df, text_col, id_col, num_perm, shingle_n)
-    # small input: eager localCheckpoint materializes the signatures ONCE in
-    # block storage (no columnar cache encode, no 4-branch materialization
-    # race, lineage truncated so AQE replans a smaller tree — measured -0.4 s
-    # cold); large corpora keep cache(), whose retained lineage recomputes
-    # lost partitions on executor failure.
-    sigs = sigs.localCheckpoint(eager=True) if small else sigs.cache()
+    # large corpora keep the shuffle joins. (Skipping materialization for
+    # small inputs was measured SLOWER — 3 recomputed scan+signature branches
+    # cost more than the one barrier — so it is unconditional.)
+    sigs, small = _materialize(minhash_signatures(df, text_col, id_col, num_perm, shingle_n),
+                               df.select(id_col, text_col))
     cands = lsh_candidate_pairs(sigs, id_col, bands, rows_per_band)
     return _verify_candidate_pairs(sigs, cands, id_col, num_perm, threshold, small)
 
 
 def token_minhash_signatures(
     df: DataFrame, tokens_col: str = "tokens", id_col: str = "doc_id",
-    num_perm: int = 128, shingle_n: int = 3, scheme: str = "oph",
+    num_perm: int = 128, shingle_n: int = 3,
 ) -> DataFrame:
     """Per-doc MinHash signatures directly over the pre-tokenized corpus
     shape (BASELINE.json:15: tokens array<int32>) — token-id n-gram shingles,
@@ -336,7 +341,6 @@ def token_minhash_signatures(
     from sketchlib import arrowutil
 
     cfg = MinHashConfig(num_perm=num_perm)
-    sig_fn = mh.signatures_segmented_oph if scheme == "oph" else mh.signatures_segmented
     id_type = df.schema[id_col].dataType.simpleString()
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -344,7 +348,7 @@ def token_minhash_signatures(
             flat, starts = arrowutil.list_to_flat(batch.column(tokens_col))
             wh = splitmix64(flat.astype(np.uint64), seed=11)
             sh, sstarts = _shingle_hashes(wh, starts.astype(np.int64), shingle_n)
-            sigs = sig_fn(sh, sstarts, cfg)
+            sigs = mh.signatures_segmented_oph(sh, sstarts, cfg)
             arr = pa.FixedSizeListArray.from_arrays(
                 pa.array(sigs.view(np.int64).ravel(), type=pa.int64()), cfg.num_perm
             ).cast(pa.list_(pa.int64()))
@@ -365,9 +369,9 @@ def token_near_duplicates(
     """MinHash-LSH near-dup over token arrays: signatures → band-bucket join
     → slot-agreement verification (same machinery as the text pipeline)."""
     rows_per_band = num_perm // bands
-    small = _plan_size_bytes(df.select(id_col, tokens_col)) <= _SMALL_INPUT_BYTES
-    sigs = token_minhash_signatures(df, tokens_col, id_col, num_perm, shingle_n)
-    sigs = sigs.localCheckpoint(eager=True) if small else sigs.cache()
+    sigs, small = _materialize(
+        token_minhash_signatures(df, tokens_col, id_col, num_perm, shingle_n),
+        df.select(id_col, tokens_col))
     cands = lsh_candidate_pairs(sigs, id_col, bands, rows_per_band)
     return _verify_candidate_pairs(sigs, cands, id_col, num_perm, threshold, small)
 
@@ -431,10 +435,7 @@ def simhash_near_duplicates(
     all 4 of the same (band, v) buckets, and an uncapped self-join goes
     quadratic on those single keys. Only oversized-bucket KEYS are broadcast;
     members are thinned by a deterministic hash sample."""
-    sh = simhash(df, text_col, id_col)
-    sh = (sh.localCheckpoint(eager=True)
-          if _plan_size_bytes(df.select(id_col, text_col)) <= _SMALL_INPUT_BYTES
-          else sh.cache())
+    sh, _ = _materialize(simhash(df, text_col, id_col), df.select(id_col, text_col))
     bands = [
         F.shiftrightunsigned(F.col("simhash"), b * 16).bitwiseAND(F.lit(0xFFFF)).alias(f"_s{b}")
         for b in range(4)
@@ -477,11 +478,14 @@ def simhash_near_duplicates(
 def ngram_jaccard_pairs(df: DataFrame, pairs: DataFrame, text_col: str = "text",
                         id_col: str = "doc_id", shingle_n: int = 3) -> DataFrame:
     """Exact shingle-set Jaccard for given (a, b) pairs — the verifier behind
-    the MinHash estimate. Uses Spark array ops (JVM-side)."""
+    the MinHash estimate. Uses Spark array ops (JVM-side). The pair list is
+    materialized by ``_materialize``: for a small ``df`` that runs one job
+    here (eager checkpoint); for a large one it is cached lazily with its
+    lineage retained."""
     # materialize the pair list once: callers typically pass the
     # un-materialized output of a full LSH pipeline, and the plan below
     # references it three times (two id prunes + the final join)
-    pairs = pairs.localCheckpoint(eager=True)
+    pairs, _ = _materialize(pairs, df.select(id_col, text_col))
     # shingle only documents that appear in some pair (guide §3: reduce the
     # big side before the join) — the inner joins below drop every other
     # document anyway, so rows are unchanged; the gram computation is the

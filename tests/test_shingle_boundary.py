@@ -16,7 +16,7 @@ def _sig_for(texts: list[str], cfg: MinHashConfig, n=3) -> list[np.ndarray]:
 
     wh, starts = textops._word_hashes(pd.Series(texts))
     sh, sstarts = textops._shingle_hashes(wh, starts.astype(np.int64), n)
-    return list(mh.signatures_segmented(sh, sstarts, cfg))
+    return list(mh.signatures_segmented_oph(sh, sstarts, cfg))
 
 
 def test_short_doc_signature_independent_of_neighbors():

@@ -430,16 +430,23 @@ def test_file_scan_build_plain_file_matches_directory(spark, tmp_path):
 
 def test_probe_chain_marks_output_and_skips_recoalesce(spark, corpus):
     """Chained probes skip the per-call partition-count read: the probe
-    output carries the packed marker and passes through the coalesce helper
-    untouched (the input is already packed; withColumn cannot change it)."""
+    output carries the "coalesce check done" marker and passes through the
+    coalesce helper untouched (withColumn cannot change the partitioning).
+    Any transformation in between drops the marker by design, and the next
+    probe makes the check again with unchanged results."""
     spec = [agg.SketchSpec("bloom", BloomConfig(
         m_bits=1 << 18, k=4, word_bits=64, words_per_block=8, sectors=1), "tokens")]
     blob = agg.collect_blobs(agg.build_sketches(corpus, spec))[("bloom", "")]
     keys = corpus.select(F.explode("tokens").alias("t")).limit(1000)
     p1 = probe.with_bloom_membership(keys, blob, "t", "m1")
-    assert getattr(p1, "_sketchlib_probe_coalesced", False)
+    assert getattr(p1, "_sketchlib_coalesce_checked", False)
     assert probe._coalesce_for_probe(p1) is p1
-    # chained probe results are unchanged by the skip
-    p2 = probe.with_bloom_membership(p1, blob, "t", "m2")
+    # token ids are non-negative: the filter keeps every row
+    mid = p1.filter(F.col("t") >= 0)
+    assert not getattr(mid, "_sketchlib_coalesce_checked", False)
+    # the probe after the filter re-checks and agrees row for row
+    p2 = probe.with_bloom_membership(mid, blob, "t", "m2")
+    assert getattr(p2, "_sketchlib_coalesce_checked", False)
     rows = p2.select("m1", "m2").collect()
+    assert len(rows) == p1.count()
     assert rows and all(r["m1"] == r["m2"] for r in rows)
