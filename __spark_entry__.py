@@ -579,7 +579,9 @@ def sk_bloom_fpr_grid(spark, sf_dir):
     # aggregation job yields all 9 counts (was 18 sequential count() jobs,
     # each paying its own stage/python-task latency; measured 20.6 s -> ~2 s
     # warm at sf0.01). Counts are produced by the identical kernel over the
-    # identical inputs, so the emitted rows are unchanged.
+    # identical inputs, so the emitted rows are unchanged. Each of the 9
+    # blobs is broadcast once: the second probe of a blob reuses the
+    # broadcast made by the first (probe._broadcast), 9 broadcasts, not 18.
     names = list(cfgs)
     kdf, pdf = keys_df, probes
     for i, name in enumerate(names):

@@ -7,7 +7,9 @@ unverified]); the Spark idiom is a boolean membership column — Catalyst turns
 any downstream plan (semi-join pruning, sideways information passing).
 
 Blobs are shipped via ``SparkContext.broadcast`` (one copy per executor, not
-per task) and probed with vectorized kernels inside a scalar Arrow UDF over
+per task), one broadcast per distinct blob per SparkContext: later probes of an
+equal blob reuse it, within a byte budget (``_BROADCAST_BUDGET_BYTES``). They
+are probed with vectorized kernels inside a scalar Arrow UDF over
 ONLY the key column: the plan's ``ArrowEvalPython`` exchange transfers just
 that column to the Python worker and the JVM zips the result column back in.
 (The previous ``mapInArrow`` formulation round-tripped the ENTIRE input
@@ -16,6 +18,9 @@ when probing a wide 100 TB corpus table.)
 """
 
 from __future__ import annotations
+
+import threading
+from collections import OrderedDict
 
 import numpy as np
 import pyarrow as pa
@@ -54,11 +59,46 @@ def _coalesce_for_probe(df: DataFrame) -> DataFrame:
     return df
 
 
+# Bytes of blobs whose broadcasts one SparkContext keeps for reuse. In bytes
+# because each cached blob also stays loaded in every Python worker that
+# probed it. The newest blob is always admitted, whatever its size.
+_BROADCAST_BUDGET_BYTES = 512 << 20
+_broadcast_lock = threading.Lock()
+
+
+def _broadcast(sc, blob):
+    """The broadcast of ``blob`` on ``sc``, made on the first probe of an
+    equal blob and reused by later ones: re-broadcasting a 128 MiB filter
+    re-pickles it, re-registers it in the block manager and makes every
+    Python worker load it again, per call.
+
+    The cache is an LRU keyed by the blob's bytes, stored on the SparkContext
+    so a stopped context takes its broadcasts with it. A ``bytes`` blob is
+    its own key (CPython caches its hash); other buffers are copied to
+    ``bytes`` first, as pickling them would. Eviction only drops the cache's
+    reference and never unpersists: lazy DataFrames from earlier calls still
+    hold the broadcast in their UDF closure, and Spark's ContextCleaner frees
+    it once nothing refers to it."""
+    key = blob if isinstance(blob, bytes) else bytes(blob)
+    with _broadcast_lock:
+        cache = getattr(sc, "_sketchlib_broadcasts", None)
+        if cache is None:
+            cache = sc._sketchlib_broadcasts = OrderedDict()
+        bc = cache.get(key)
+        if bc is not None:
+            cache.move_to_end(key)
+            return bc
+        bc = cache[key] = sc.broadcast(key)
+        held = sum(len(k) for k in cache)
+        while held > _BROADCAST_BUDGET_BYTES and len(cache) > 1:
+            held -= len(cache.popitem(last=False)[0])
+        return bc
+
+
 def _append_col_map(df: DataFrame, blob: bytes, col: str, out: str, kernel, out_type,
                     array_mode: str = "all"):
-    spark = df.sparkSession
     df = _coalesce_for_probe(df)
-    bc = spark.sparkContext.broadcast(blob)
+    bc = _broadcast(df.sparkSession.sparkContext, blob)
 
     def probe(arr: pa.Array) -> pa.Array:
         payload_blob = bc.value
