@@ -36,7 +36,7 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 
-from sketchlib import arrowutil, blob as blobmod, bloom, cms, cuckoo, hll, kll, minhash, tdigest
+from sketchlib import _worker, arrowutil, blob as blobmod, bloom, cms, cuckoo, hll, kll, minhash, tdigest
 from sketchlib.config import (
     BloomConfig, CMSConfig, HLLConfig, KLLConfig, MinHashConfig, SketchConfigError, TDigestConfig, _Cfg,
 )
@@ -117,6 +117,7 @@ def _build_partials_fn(specs: list[SketchSpec], group_by: str | None, part_col: 
     spec_list = [(s.name, s.sketch, s.cfg.to_json(), s.col) for s in specs]
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        _worker.drop_spark_zip_finders()
         from pyspark import TaskContext
 
         part_id = TaskContext.get().partitionId() if TaskContext.get() else -1
@@ -509,11 +510,14 @@ def build_partials_files(
         spark, list(enumerate(files)), specs, group_by, batch_size)
 
 
-# a python-exec task costs ~250 ms of JVM-side runner latency on the bench
-# host even when the worker does nothing (measured: 64 trivial mapInArrow
-# tasks = 0.56 s wall warm, in-worker time 20 ms) — so the scan stage wants
-# AT MOST one wave of tasks, and the task list must not itself be shipped
-# through a python-backed createDataFrame stage (another full wave).
+# a python-exec task has a fixed cost even when the worker does nothing:
+# warm, a trivial 4-task mapInArrow job takes ~0.16 s wall on a 4-core host,
+# with ~60 ms of JVM task time per task, spent mostly waiting on the
+# worker's socket, and ~35 ms of worker CPU outside the function (~0.26 s
+# and ~145 ms per task while Spark's zip import finders were re-read every
+# task, see _worker.py) — so the scan stage wants AT MOST one wave of
+# tasks, and the task list must not itself be shipped through a
+# python-backed createDataFrame stage (another stage and a shuffle).
 _MAX_CLOSURE_PATH_BYTES = 64 << 20
 
 
@@ -523,6 +527,7 @@ def _merge_blob_rows(tbl: pa.Table) -> pa.Table:
     call it, so the two cannot diverge. It hands the blobs, in part-id order
     (stable sort), to the sketch's one n-ary ``merge_many_blobs``; extra
     input columns (the tree's ``bucket``) are ignored."""
+    _worker.drop_spark_zip_finders()
     # sort indices, not Table.sort_by (sorting the table copies every blob),
     # and each blob read as a zero-copy Arrow buffer, not a bytes copy
     order = pc.sort_indices(tbl.column("part")).to_numpy()

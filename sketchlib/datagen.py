@@ -24,6 +24,8 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
 
+from sketchlib import _worker
+
 VOCAB = 1 << 17
 CHUNK_DOCS = 2_000
 ZIPF_S = 1.2
@@ -84,6 +86,7 @@ def corpus_df(spark: SparkSession, n_docs: int, seed: int = 42, partitions: int 
     ids = spark.range(0, n_chunks, numPartitions=parts)
 
     def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        _worker.drop_spark_zip_finders()
         for batch in batches:
             for cid in batch.column("id").to_pylist():
                 nd = last if cid == n_chunks - 1 else CHUNK_DOCS

@@ -25,6 +25,8 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame
 
+from sketchlib import _worker
+
 _MAGIC = b"FAKE"
 KIND_IMAGE = 1
 KIND_AUDIO = 2
@@ -107,6 +109,7 @@ def extract_metadata(df: DataFrame, blob_col: str = "blob", id_col: str = "media
     gather per Arrow batch)."""
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        _worker.drop_spark_zip_finders()
         for batch in batches:
             if batch.num_rows == 0:
                 continue
@@ -132,6 +135,7 @@ def image_features(df: DataFrame, blob_col: str = "blob", id_col: str = "media_i
     ``extract_metadata``) instead of ``bytes(None)`` aborting the task."""
 
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        _worker.drop_spark_zip_finders()
         for pdf in it:
             out = []
             for mid, blob in zip(pdf[id_col], pdf[blob_col]):
@@ -153,6 +157,7 @@ def synth_media_df(spark, n: int, partitions: int = 4) -> DataFrame:
     """Deterministic fake media table for tests: (media_id, blob)."""
 
     def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        _worker.drop_spark_zip_finders()
         for pdf in it:
             ids = pdf["id"].to_numpy()
             blobs = [

@@ -27,15 +27,16 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
 
-from sketchlib import arrowutil, blob as blobmod, bloom, cms, cuckoo, kll
+from sketchlib import _worker, arrowutil, blob as blobmod, bloom, cms, cuckoo, kll
 from sketchlib.config import SketchConfigError
 
 
 def _coalesce_for_probe(df: DataFrame) -> DataFrame:
     """Pack a many-small-partition input into fewer probe tasks: every
-    python-exec task costs ~250 ms of JVM runner latency regardless of size,
-    so a 101-file corpus probed at one-file-per-task pays 4 waves of pure
-    overhead. Target = max(default parallelism, input_bytes / 128 MB) — a
+    python-exec task has a fixed cost regardless of size (~60 ms of JVM task
+    time for an empty task on a 4-core host, see the note above
+    ``agg._MAX_CLOSURE_PATH_BYTES``), so a 101-file corpus probed at
+    one-file-per-task pays ~26 waves of it on 4 cores instead of one. Target = max(default parallelism, input_bytes / 128 MB) — a
     100 TB table keeps its thousands of partitions, a small one collapses to
     one wave. coalesce() is a narrow dependency: no shuffle, no row movement
     across workers beyond task packing, so results are unchanged.
@@ -101,6 +102,7 @@ def _append_col_map(df: DataFrame, blob: bytes, col: str, out: str, kernel, out_
     bc = _broadcast(df.sparkSession.sparkContext, blob)
 
     def probe(arr: pa.Array) -> pa.Array:
+        _worker.drop_spark_zip_finders()
         payload_blob = bc.value
         if isinstance(arr, pa.ChunkedArray):
             arr = arr.combine_chunks()

@@ -23,6 +23,8 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
 
+from sketchlib import _worker
+
 
 def _valid_matrix(arr: pa.Array, dim: int) -> tuple[np.ndarray, np.ndarray]:
     """Row-aligned ``(n_rows x dim)`` float64 matrix + validity mask for an
@@ -92,6 +94,7 @@ def cosine_topk_arrow(df: DataFrame, query: list[float], k: int = 10,
     id_type = df.schema[id_col].dataType.simpleString()
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        _worker.drop_spark_zip_finders()
         best_ids: list = []
         best_scores: list = []
         for batch in batches:
@@ -136,6 +139,7 @@ def with_lsh_bucket(df: DataFrame, dim: int, n_bits: int = 16, seed: int = 4242,
     fields = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        _worker.drop_spark_zip_finders()
         planes = _planes(dim, n_bits, seed)
         weights = (1 << np.arange(n_bits, dtype=np.int64))
         for batch in batches:
@@ -185,6 +189,7 @@ def embedding_near_duplicates(
     fields = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        _worker.drop_spark_zip_finders()
         planes = [
             _planes(dim, bits_per_table, seed + 1000 * t) for t in range(n_tables)
         ]
@@ -313,6 +318,7 @@ def with_ivf_cluster(df: DataFrame, centroids: np.ndarray,
     cent = centroids.copy()
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        _worker.drop_spark_zip_finders()
         for batch in batches:
             mat, valid = _valid_matrix(batch.column(vec_col), cent.shape[1])
             mat = mat / (np.linalg.norm(mat, axis=1, keepdims=True) + 1e-30)

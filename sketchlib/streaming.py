@@ -25,7 +25,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from sketchlib import agg
+from sketchlib import _worker, agg
 from sketchlib.agg import SketchSpec
 
 
@@ -191,6 +191,7 @@ def stateful_windowed_sketch(
         "spark.sql.session.timeZone") or "UTC"
 
     def fn(key, pdf_iter, state: GroupState):
+        _worker.drop_spark_zip_finders()
         from sketchlib.agg import MODULES
 
         cfg = _Cfg.from_json(cfg_json)

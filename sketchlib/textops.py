@@ -30,7 +30,7 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
 
-from sketchlib import minhash as mh
+from sketchlib import _worker, minhash as mh
 from sketchlib.config import MinHashConfig
 from sketchlib.hashing import splitmix64
 
@@ -151,6 +151,7 @@ def minhash_signatures(
     schema = ", ".join(f"{n} {t}" for n, t in in_fields) + ", signature array<bigint>"
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        _worker.drop_spark_zip_finders()
         for batch in batches:
             texts = batch.column(text_col)
             ids = batch.column(id_col)
@@ -344,6 +345,7 @@ def token_minhash_signatures(
     id_type = df.schema[id_col].dataType.simpleString()
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        _worker.drop_spark_zip_finders()
         for batch in batches:
             flat, starts = arrowutil.list_to_flat(batch.column(tokens_col))
             wh = splitmix64(flat.astype(np.uint64), seed=11)
@@ -385,6 +387,7 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> Da
     in_type = df.schema[id_col].dataType.simpleString()
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        _worker.drop_spark_zip_finders()
         for batch in batches:
             ids = batch.column(id_col)
             # Arrow array straight through (same as minhash_signatures); the
@@ -603,6 +606,7 @@ def langid_trigram(df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
     profiles = {lg: _trigram_codes(t) for lg, t in _TRIGRAM_PROFILES.items()}
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        _worker.drop_spark_zip_finders()
         for batch in batches:
             arr = batch.column(text_col)
             if isinstance(arr, pa.ChunkedArray):
@@ -743,6 +747,7 @@ def doc_fingerprints(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
     in_type = df.schema[id_col].dataType.simpleString()
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        _worker.drop_spark_zip_finders()
         for batch in batches:
             arr = batch.column(text_col)
             if isinstance(arr, pa.ChunkedArray):

@@ -30,7 +30,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 
-from sketchlib import agg, arrowutil, blob as blobmod, cms
+from sketchlib import _worker, agg, arrowutil, blob as blobmod, cms
 from sketchlib.config import CMSConfig, SketchConfigError
 
 # candidate rows carry (value, cnt); partial rows carry agg.PARTIAL_SCHEMA's
@@ -46,6 +46,7 @@ def _make_local_pass(col: str, c: int, cfg_json: str):
     import time
 
     def local_pass(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        _worker.drop_spark_zip_finders()
         from pyspark import TaskContext
 
         from sketchlib.config import CMSConfig as _CMSConfig
