@@ -724,12 +724,15 @@ def sk_ngram_jaccard_verify(spark, sf_dir):
 
 
 def sk_build_arrow_scan(spark, sf_dir):
-    """Arrow-native file-scan build (round 3 fast path) self-verified
-    against the canonical DataFrame-scan build on the same parquet corpus:
-    byte-identical blobs for ALL FIVE sketches (round 4 — fixed ingest
-    quanta + canonical serialization + permutation-invariant n-ary merge
-    closed the former kll/tdigest estimate-only carve-out). Rows-only by
-    design (engine comparison, not SQL).
+    """Arrow-native file-scan build (round 3 fast path) compared with the
+    canonical DataFrame-scan build on the same parquet corpus, per sketch:
+    byte identity plus one estimate from each engine. Bloom, HLL and CMS
+    blobs are byte-identical under any partial layout (monoid merges); KLL
+    and t-digest blobs are byte-identical only when both engines fold the
+    same partial layout, since their interior merges compact (8 files at
+    local[4] give KLL blobs of 4,881 vs 9,673 bytes; a canonical merge
+    topology is ROADMAP direction 3). Rows-only by design (engine
+    comparison, not SQL).
 
     The fast path exists because the mapInArrow input detour
     (parquet -> InternalRow -> Arrow) measures ~6x the task CPU of a

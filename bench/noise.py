@@ -60,14 +60,6 @@ def spin_observations(repo: str) -> list[list[float]]:
     return [o for o in obs if now - o[0] < SPIN_FLOOR_MAX_AGE_S]
 
 
-def read_spin_floor(repo: str) -> float | None:
-    """The best calibration spin (ms) of the last 7 days, or None when there
-    is none or it is non-positive. Callers choose their own fallback
-    (fresh measurement, unknown-epoch sentinel, ...)."""
-    floor = min((o[1] for o in spin_observations(repo)), default=0.0)
-    return floor if floor > 0 else None
-
-
 def _spin_worker(_i: int) -> float:
     a = _CALIB.copy()
     t0 = time.perf_counter()

@@ -499,8 +499,14 @@ def build_partials_files(
     better for checkpoint/resume than physical partition ids.
 
     The DataFrame path (``build_partials``) stays the canonical oracle-
-    checked route; this fast path must produce byte-identical final blobs
-    (asserted in tests — merge is partition-layout-invariant by T4)."""
+    checked route. Final blobs match it byte for byte for the monoid
+    sketches (Bloom, HLL, CMS, MinHash: their merge is partition-layout-
+    invariant by T4), but KLL and t-digest interior merges compact, so their
+    bytes match only when both engines fold the same partial layout (one
+    Spark partition per file and no more files than cores, as in
+    ``test_arrow_scan_fast_path_parity``). 8 files at local[4] give a
+    4,881-byte global KLL blob here against 9,673 from the DataFrame path;
+    a canonical merge topology is ROADMAP direction 3."""
     if not specs:
         raise SketchConfigError("no sketch specs given")
     files = list_data_files(spark, path) if isinstance(path, str) else sorted(path)
@@ -559,10 +565,13 @@ def build_partials_files_indexed(
 
     ``local_merge=True`` (the non-resume build path) folds each task's
     per-file partials into one row per (sketch, group) before they leave the
-    task — byte-safe because the merge tree is shape-invariant (pinned by
-    ``test_merge_tree_multilevel_equivalence``); it shrinks the merge-stage
-    shuffle from one blob per FILE to one per TASK. Resume keeps per-file
-    rows (its lineage is the file index)."""
+    task; it shrinks the merge-stage shuffle from one blob per FILE to one
+    per TASK. That is byte-safe for the monoid sketches, whose merge tree is
+    shape-invariant (pinned for HLL by
+    ``test_merge_tree_multilevel_equivalence``); KLL and t-digest compact at
+    each fold, so their bytes change with the task chunking once files
+    outnumber cores (ROADMAP direction 3). Resume keeps per-file rows (its
+    lineage is the file index)."""
     if not specs:
         raise SketchConfigError("no sketch specs given")
     cols = sorted({s.col for s in specs} | ({group_by} if group_by else set()))
@@ -660,7 +669,8 @@ def build_sketches_files(
         spark, list(enumerate(files)), specs, group_by, local_merge=True)
     fanout = fanout or _auto_fanout(specs)
     # local_merge leaves at most one partial per (task, sketch, group); size
-    # the tree for that count, not the file count (byte-identical either way)
+    # the tree for that count, not the file count (the tree shape leaves the
+    # monoid sketches' bytes unchanged, not KLL's or t-digest's)
     n_parts = max(1, min(len(files), int(spark.sparkContext.defaultParallelism)))
     return merge_partials(partials, fanout=fanout,
                           levels=merge_levels(fanout, n_parts))

@@ -38,11 +38,11 @@ def test_spin_and_clean_ratio_sane():
     assert noise.clean_ratio(2) <= noise.clean_ratio(8) <= noise.clean_ratio(32)
 
 
-def test_read_spin_floor_formats(tmp_path):
-    """noise.read_spin_floor is THE single reader of .cache/bench/spin_floor.json:
-    both the observation-list and legacy single-value formats parse, only
-    observations of the last 7 days count; missing / corrupt / non-positive
-    / aged-out files yield None (callers pick their fallback)."""
+def test_spin_observations_formats(tmp_path):
+    """noise.spin_observations is THE single reader of
+    .cache/bench/spin_floor.json: both the observation-list and legacy
+    single-value formats parse, only observations of the last 7 days count;
+    missing / corrupt / aged-out files yield []."""
     floor_dir = tmp_path / ".cache" / "bench"
     floor_dir.mkdir(parents=True)
     f = floor_dir / "spin_floor.json"
@@ -50,15 +50,15 @@ def test_read_spin_floor_formats(tmp_path):
     aged = now - 8 * 86400
     f.write_text(json.dumps({"spin_floor_ms": 10.0, "observations": [
         [aged, 10.0], [now - 60, 25.0], [now, 20.5]]}))
-    assert noise.read_spin_floor(str(tmp_path)) == 20.5
+    assert [o[1] for o in noise.spin_observations(str(tmp_path))] == [25.0, 20.5]
     f.write_text('{"spin_floor_ms": 33.0}')  # legacy single-value
-    assert noise.read_spin_floor(str(tmp_path)) == 33.0
-    for corrupt in ('{"spin_floor_ms": 0}', "[1, 2]", "not json", "{}",
+    assert [o[1] for o in noise.spin_observations(str(tmp_path))] == [33.0]
+    for corrupt in ("[1, 2]", "not json", "{}",
                     '{"observations": [[]]}',        # malformed entry: o[1] raises IndexError
                     '{"observations": [[1.0]]}',     # ditto, one-element entry
                     json.dumps({"spin_floor_ms": 10.0,
                                 "observations": [[aged, 10.0]]})):  # aged out
         f.write_text(corrupt)
-        assert noise.read_spin_floor(str(tmp_path)) is None
+        assert noise.spin_observations(str(tmp_path)) == []
     f.unlink()
-    assert noise.read_spin_floor(str(tmp_path)) is None
+    assert noise.spin_observations(str(tmp_path)) == []
