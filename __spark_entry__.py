@@ -525,12 +525,16 @@ def sk_bloom_fpr_grid(spark, sf_dir):
     Includes a magic-addressing (non-power-of-two m, Lemire fastrange) row:
     exact bits/key budget instead of rounding m up to a power of two.
 
-    Reading note: l_partkey is a DENSE sequential key set, and multiplicative
-    hashing spreads arithmetic progressions more evenly than random (the
-    Fibonacci-hashing property), so block loads have LESS variance than the
-    Poisson mixture assumes — empirical FPR runs somewhat below analytic at
-    small n. T2 (tests/test_fpr.py) checks the formula contract on random
-    keys at 120k scale, where empirical matches analytic within the CI."""
+    Reading note: l_partkey is a DENSE sequential key set, which the
+    multiplicative hash does not place like the random keys the Poisson
+    mixture assumes, so empirical FPR departs from analytic in a direction
+    that depends on geometry and n. At sf0.01, B512/s1/k4 at 8 bits/key
+    reads 0.02579 against an analytic 0.02335 and B512/s8/z2/k8 0.02916
+    against 0.02673; at sf0.1 all 9 rows read below analytic (ratio
+    0.31-0.80); perfbench's 131k dense-id filter reads 13% above. The fix
+    is the hash (ROADMAP "Repair the Bloom and HLL contracts"). T2
+    (tests/test_fpr.py) checks the formula contract on random keys at 120k
+    scale, where empirical matches analytic within the CI."""
     from sketchlib import agg, fpr as fprmod, probe as probemod
     from sketchlib.config import BloomConfig
 
@@ -730,8 +734,8 @@ def sk_build_arrow_scan(spark, sf_dir):
     blobs are byte-identical under any partial layout (monoid merges); KLL
     and t-digest blobs are byte-identical only when both engines fold the
     same partial layout, since their interior merges compact (8 files at
-    local[4] give KLL blobs of 4,881 vs 9,673 bytes; a canonical merge
-    topology is ROADMAP direction 3). Rows-only by design (engine
+    local[4] give KLL blobs of 4,881 vs 9,673 bytes; see ROADMAP "Canonical
+    merge topology over one file source"). Rows-only by design (engine
     comparison, not SQL).
 
     The fast path exists because the mapInArrow input detour

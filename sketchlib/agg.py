@@ -194,7 +194,6 @@ def _build_partials_fn(specs: list[SketchSpec], group_by: str | None, part_col: 
                         # SQL keeps a NULL group; without this fill the
                         # object array mixes str and None and np.unique
                         # raises TypeError on comparison
-                        import pyarrow.compute as pc
                         garr = pc.fill_null(garr, NULL_GROUP)
                         gcol = garr.to_numpy(zero_copy_only=False).astype(object)
                     elif garr.null_count:
@@ -506,7 +505,7 @@ def build_partials_files(
     Spark partition per file and no more files than cores, as in
     ``test_arrow_scan_fast_path_parity``). 8 files at local[4] give a
     4,881-byte global KLL blob here against 9,673 from the DataFrame path;
-    a canonical merge topology is ROADMAP direction 3."""
+    see ROADMAP "Canonical merge topology over one file source"."""
     if not specs:
         raise SketchConfigError("no sketch specs given")
     files = list_data_files(spark, path) if isinstance(path, str) else sorted(path)
@@ -570,8 +569,8 @@ def build_partials_files_indexed(
     shape-invariant (pinned for HLL by
     ``test_merge_tree_multilevel_equivalence``); KLL and t-digest compact at
     each fold, so their bytes change with the task chunking once files
-    outnumber cores (ROADMAP direction 3). Resume keeps per-file rows (its
-    lineage is the file index)."""
+    outnumber cores (ROADMAP "Canonical merge topology over one file
+    source"). Resume keeps per-file rows (its lineage is the file index)."""
     if not specs:
         raise SketchConfigError("no sketch specs given")
     cols = sorted({s.col for s in specs} | ({group_by} if group_by else set()))

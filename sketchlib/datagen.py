@@ -1,4 +1,4 @@
-"""Deterministic synthetic corpus generator (FIXTURES.md F1/F2).
+"""Deterministic synthetic corpus generator (FIXTURES.md F1).
 
 Schema per the input hint (BASELINE.json:15):
 ``doc_id:string, tokens:array<int32>, n_tok:int32, source:string``.
@@ -105,15 +105,3 @@ def corpus_parquet(spark: SparkSession, n_docs: int, cache_dir: str, seed: int =
         corpus_df(spark, n_docs, seed, partitions).write.mode("overwrite").parquet(path)
     return path
 
-
-def probe_sets(member_pool: np.ndarray, seed: int = 43,
-               n_members: int = 50_000, n_non: int = 200_000) -> tuple[np.ndarray, np.ndarray]:
-    """FIXTURES.md F2: (members ⊆ pool, non_members ⊆ [V, 2**31) — disjoint
-    from any valid token id)."""
-    rng = np.random.default_rng(seed)
-    # without replacement: the with-replacement default + unique used to
-    # deliver ~20-40% fewer members than the documented fixture size
-    members = np.unique(rng.choice(
-        member_pool, size=min(n_members, member_pool.size), replace=False))
-    non_members = rng.integers(VOCAB, 2**31 - 1, size=n_non, dtype=np.int64).astype(np.int32)
-    return members.astype(np.int32), np.unique(non_members)

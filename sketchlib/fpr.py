@@ -16,7 +16,7 @@ from collections import Counter
 
 import numpy as np
 
-from sketchlib.config import BloomConfig
+from sketchlib.config import BloomConfig, SketchConfigError
 
 
 def fpr_standard(m: int, n: int, k: int) -> float:
@@ -167,19 +167,18 @@ def suggest_config(
         raise ValueError("target_fpr must be in (0,1)")
     word_bits = 64 if block_bits >= 64 else 32
     words_per_block = max(1, block_bits // word_bits)
+    ks = [k for k in range(1, 17) if not (k % zones or k % sectors)]
+    if not ks:
+        raise SketchConfigError(
+            f"no k in [1, 16] is a multiple of sectors={sectors} and zones={zones}")
     m = 1 << max(int(math.ceil(math.log2(max(n, 1) * 2))), int(math.log2(block_bits)))
     while m <= max_m_bits:
         best_k, best_f = None, 1.0
-        for k in range(1, 17):
-            if k % zones or k % sectors:
-                continue
-            try:
-                cfg = BloomConfig(
-                    m_bits=m, k=k, word_bits=word_bits,
-                    words_per_block=words_per_block, sectors=sectors, zones=zones,
-                )
-            except Exception:
-                continue
+        for k in ks:
+            cfg = BloomConfig(
+                m_bits=m, k=k, word_bits=word_bits,
+                words_per_block=words_per_block, sectors=sectors, zones=zones,
+            )
             f = fpr(cfg, n)
             if f < best_f:
                 best_f, best_k = f, k

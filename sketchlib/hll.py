@@ -250,10 +250,6 @@ def estimate_blob(blob: bytes) -> float:
     return estimate_registers(decode_registers(payload, cfg.p), cfg.p)
 
 
-def standard_error(cfg: HLLConfig) -> float:
-    return 1.04 / math.sqrt(cfg.m)
-
-
 def estimate_union(a: bytes, b: bytes) -> float:
     """|A ∪ B| — exact HLL semantics (register max), same error as a single
     sketch of the union."""

@@ -11,7 +11,7 @@ import numpy as np
 import pytest
 
 from sketchlib import bloom, fpr
-from sketchlib.config import BloomConfig
+from sketchlib.config import BloomConfig, SketchConfigError
 
 SEED = 42
 N_KEYS = 120_000
@@ -161,6 +161,17 @@ def test_suggest_config_meets_target():
             assert fpr.fpr(cfg, n) <= target
             # and it shouldn't be absurdly oversized (>64 bits/key)
             assert cfg.m_bits / n <= 64
+
+
+@pytest.mark.parametrize("geom, match", [
+    (dict(sectors=3), "sectors must be a power of two"),
+    (dict(sectors=8, zones=16), "zones must be a power of two"),
+    (dict(sectors=32), "no k in"),
+], ids=["sectors3", "zones16", "sectors32"])
+def test_suggest_config_rejects_invalid_geometry(geom, match):
+    # an invalid geometry is a config error, not an unreachable target
+    with pytest.raises(SketchConfigError, match=match):
+        fpr.suggest_config(1000, 0.01, block_bits=512, **geom)
 
 
 def test_fpr_monotone_in_n():
