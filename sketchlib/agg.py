@@ -474,45 +474,8 @@ def list_data_files(spark, path: str, suffix: str = ".parquet") -> list[str]:
 
 
 _FILE_PART = "_file_part"
-
-
-def build_partials_files(
-    spark,
-    path: str | list[str],
-    specs: list[SketchSpec],
-    group_by: str | None = None,
-    batch_size: int = 1 << 16,
-) -> DataFrame:
-    """Arrow-native scan fast path for the build job: Spark distributes the
-    parquet FILES; each task decodes its files columnar with pyarrow inside
-    ``mapInArrow`` and feeds the same partial-builder kernel.
-
-    Why: Spark's ``mapInArrow`` input crosses parquet -> InternalRow ->
-    Arrow; measured on the bench corpus that JVM row path costs ~19 s on 32
-    cores where pyarrow's native columnar decode of the SAME files costs
-    1.4 s on ONE core (~100x per-core). The build job needs no Catalyst
-    predicate work (full-scan + column prune, done explicitly here via
-    ``columns=``), so handing the scan to pyarrow keeps the plan semantics
-    and removes the row detour. Partials are keyed by FILE INDEX, so
-    lineage is data-derived and stable under cluster resizing — strictly
-    better for checkpoint/resume than physical partition ids.
-
-    The DataFrame path (``build_partials``) stays the canonical oracle-
-    checked route. Final blobs match it byte for byte for the monoid
-    sketches (Bloom, HLL, CMS, MinHash: their merge is partition-layout-
-    invariant by T4), but KLL and t-digest interior merges compact, so their
-    bytes match only when both engines fold the same partial layout (one
-    Spark partition per file and no more files than cores, as in
-    ``test_arrow_scan_fast_path_parity``). 8 files at local[4] give a
-    4,881-byte global KLL blob here against 9,673 from the DataFrame path;
-    see ROADMAP "Canonical merge topology over one file source"."""
-    if not specs:
-        raise SketchConfigError("no sketch specs given")
-    files = list_data_files(spark, path) if isinstance(path, str) else sorted(path)
-    if not files:
-        raise SketchConfigError(f"no parquet data files under {path}")
-    return build_partials_files_indexed(
-        spark, list(enumerate(files)), specs, group_by, batch_size)
+# rows per pyarrow decode batch in the file scan
+_SCAN_BATCH_ROWS = 1 << 16
 
 
 # a python-exec task has a fixed cost even when the worker does nothing:
@@ -555,12 +518,34 @@ def build_partials_files_indexed(
     pairs: list[tuple[int, str]],
     specs: list[SketchSpec],
     group_by: str | None = None,
-    batch_size: int = 1 << 16,
     local_merge: bool = False,
 ) -> DataFrame:
-    """Fast-path partials over explicit ``(file_index, file_path)`` pairs —
+    """Arrow-native scan fast path for the build job, over explicit
+    ``(file_index, file_path)`` pairs: Spark distributes the parquet FILES;
+    each task decodes its files columnar with pyarrow inside ``mapInArrow``
+    and feeds the same partial-builder kernel.
+
+    Why: Spark's ``mapInArrow`` input crosses parquet -> InternalRow ->
+    Arrow; measured on the bench corpus that JVM row path costs ~19 s on 32
+    cores where pyarrow's native columnar decode of the SAME files costs
+    1.4 s on ONE core (~100x per-core). The build job needs no Catalyst
+    predicate work (full-scan + column prune, done explicitly here via
+    ``columns=``), so handing the scan to pyarrow keeps the plan semantics
+    and removes the row detour. Partials are keyed by FILE INDEX, so
+    lineage is data-derived and stable under cluster resizing — strictly
+    better for checkpoint/resume than physical partition ids. This is also
     the resume seam: a checkpointed job re-runs only the missing file
     indices while keeping their original lineage ids.
+
+    The DataFrame path (``build_partials``) stays the canonical oracle-
+    checked route. Final blobs match it byte for byte for the monoid
+    sketches (Bloom, HLL, CMS, MinHash: their merge is partition-layout-
+    invariant by T4), but KLL and t-digest interior merges compact, so their
+    bytes match only when both engines fold the same partial layout (one
+    Spark partition per file and no more files than cores, as in
+    ``test_arrow_scan_fast_path_parity``). 8 files at local[4] give a
+    4,881-byte global KLL blob here against 9,673 from the DataFrame path;
+    see ROADMAP "Canonical merge topology over one file source".
 
     ``local_merge=True`` (the non-resume build path) folds each task's
     per-file partials into one row per (sketch, group) before they leave the
@@ -603,7 +588,7 @@ def build_partials_files_indexed(
             # pyarrow's full cpu_count() decode pool (32 threads x
             # 32 tasks on the bench box) — measured slower even
             # solo, and oversubscription thrash on the wide legs
-            for rb in pf.iter_batches(columns=cols, batch_size=batch_size,
+            for rb in pf.iter_batches(columns=cols, batch_size=_SCAN_BATCH_ROWS,
                                       use_threads=False):
                 yield rb.append_column(
                     _FILE_PART,
@@ -662,8 +647,11 @@ def build_sketches_files(
     """End-to-end fast-path build: pyarrow file scan -> partials -> tree
     merge. Same output contract as ``build_sketches``. Lists the input
     exactly once (a second recursive walk could disagree with the first on
-    object stores with concurrent writers)."""
+    object stores with concurrent writers); an empty listing raises
+    ``SketchConfigError`` before any Spark job."""
     files = list_data_files(spark, path) if isinstance(path, str) else sorted(path)
+    if not files:
+        raise SketchConfigError(f"no parquet data files under {path}")
     partials = build_partials_files_indexed(
         spark, list(enumerate(files)), specs, group_by, local_merge=True)
     fanout = fanout or _auto_fanout(specs)

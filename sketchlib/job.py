@@ -263,7 +263,7 @@ def run_files(
     _fs_mkdirs(spark, checkpoint_dir)
     files = tuple(agg.list_data_files(spark, path))
     if not files:
-        # mirror build_partials_files: fail here with a typed error instead
+        # mirror build_sketches_files: fail here with a typed error instead
         # of a raw AnalysisException on the nonexistent partials dir later
         raise SketchConfigError(f"no parquet data files under {path}")
     job = FileJobSpec(specs=tuple(specs), files=files, group_by=group_by)

@@ -61,18 +61,16 @@ def _valid_matrix(arr: pa.Array, dim: int) -> tuple[np.ndarray, np.ndarray]:
     return mat, valid
 
 
+def _dot(u: "F.Column", v: "F.Column") -> "F.Column":
+    """JVM-side dot product of two equal-length arrays (built-in higher-order
+    functions, so it stays in whole-stage codegen)."""
+    return F.aggregate(F.zip_with(u, v, lambda a, b: a * b), F.lit(0.0), lambda acc, x: acc + x)
+
+
 def _cos_expr(vec_col: str, q: list[float]) -> "F.Column":
-    qarr = F.array(*[F.lit(float(x)) for x in q])
-    dot = F.aggregate(
-        F.zip_with(F.col(vec_col), qarr, lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    norm_v = F.sqrt(
-        F.aggregate(F.transform(F.col(vec_col), lambda a: a * a), F.lit(0.0), lambda acc, x: acc + x)
-    )
+    v = F.col(vec_col)
     qn = float(np.sqrt(np.dot(q, q)))
-    return dot / (norm_v * F.lit(qn))
+    return _dot(v, F.array(*[F.lit(float(x)) for x in q])) / (F.sqrt(_dot(v, v)) * F.lit(qn))
 
 
 def cosine_topk_sql(df: DataFrame, query: list[float], k: int = 10,
@@ -183,10 +181,10 @@ def embedding_near_duplicates(
     EXACTLY verified with a JVM-side cosine, so precision is 1.0 by
     construction and LSH only affects recall.
 
-    Scale: candidates are bucketed (never all-pairs); oversized buckets are
-    hash-thinned like the MinHash-LSH path; at 100 TB the bucketed table is
-    written once, partitioned by (table, bucket)."""
-    fields = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
+    Scale: candidates come from the same banded-LSH stage as the MinHash
+    path (``textops._band_pairs``: bucketed, never all-pairs; oversized
+    buckets hash-thinned); at 100 TB the bucketed table is written once,
+    partitioned by (table, bucket)."""
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         _worker.drop_spark_zip_finders()
@@ -199,8 +197,8 @@ def embedding_near_duplicates(
             out = batch
             for t in range(n_tables):
                 sig = (((mat @ planes[t]) > 0) @ weights).astype(np.int64)
-                # null signature for null/malformed vectors: Spark's
-                # equi-join never matches null keys, so they can't pair
+                # null signature for null/malformed vectors: _band_pairs
+                # drops null buckets, so they can't pair
                 out = out.append_column(f"_h{t}", pa.array(sig, mask=~valid))
             yield out
 
@@ -213,61 +211,21 @@ def embedding_near_duplicates(
     # aggregate, capped table, both verify sides) would otherwise re-run the
     # scan + python signature stage. Provably small inputs also broadcast
     # the verify sides; large corpora keep shuffle joins.
-    from sketchlib.textops import _materialize
+    from sketchlib.textops import _band_pairs, _join_pair_sides, _materialize
 
     signed, small = _materialize(signed, df.select(id_col, vec_col))
-    stacked = signed.select(
-        id_col, vec_col,
-        F.explode(F.array(*[
-            F.struct(F.lit(t).alias("tbl"), F.col(f"_h{t}").alias("h"))
-            for t in range(n_tables)
-        ])).alias("th"),
-    ).select(id_col, vec_col, F.col("th.tbl").alias("tbl"), F.col("th.h").alias("h"))
-    oversized = (
-        stacked.groupBy("tbl", "h").agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") > max_bucket)
-    )
-    capped = (
-        stacked.join(F.broadcast(oversized), ["tbl", "h"], "left_outer")
-        .filter(F.col("_n").isNull()
-                | (F.pmod(F.xxhash64(id_col, "tbl", "h"),
-                          F.ceil(F.col("_n") / max_bucket).cast("long")) == 0))
-        .drop("_n")
-    )
-    a = capped.select(F.col(id_col).alias("a"), "tbl", "h")
-    b = capped.select(F.col(id_col).alias("b"), "tbl", "h")
-    # dedup candidate pairs on ids ONLY (a pair surfacing in several tables
+    bands = [F.struct(F.lit(t).alias("band"), F.col(f"_h{t}").alias("h")) for t in range(n_tables)]
+    stacked = signed.select(id_col, F.explode(F.array(*bands)).alias("bh")).select(
+        id_col, "bh.band", "bh.h")
+    # candidate pairs carry ids ONLY (a pair surfacing in several tables
     # must not drag two full dim-sized vectors through the distinct's
-    # shuffle), then join the vectors back once for the exact verify
-    pair_ids = (
-        a.join(b, ["tbl", "h"]).filter(F.col("a") < F.col("b"))
-        .select("a", "b").distinct()
-    )
-    # the signature pass carries id and vector through untouched, so the
-    # verify vectors come from the materialized table, not a fresh scan
-    vecs = signed.select(id_col, vec_col)
-    if small:
-        # one broadcast projection for both sides (rename above the
-        # exchange): the second join reuses the first build (ReusedExchange)
-        base = F.broadcast(vecs)
-        cands = (
-            pair_ids.join(base.alias("_ta"), F.col("a") == F.col(f"_ta.{id_col}"))
-            .join(base.alias("_tb"), F.col("b") == F.col(f"_tb.{id_col}"))
-        )
-        va, vb = F.col(f"_ta.{vec_col}"), F.col(f"_tb.{vec_col}")
-    else:
-        cands = (
-            pair_ids
-            .join(vecs.select(F.col(id_col).alias("a"), F.col(vec_col).alias("_va")), "a")
-            .join(vecs.select(F.col(id_col).alias("b"), F.col(vec_col).alias("_vb")), "b")
-        )
-        va, vb = F.col("_va"), F.col("_vb")
-    dot = F.aggregate(F.zip_with(va, vb, lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, x: acc + x)
-    norm = lambda c: F.sqrt(F.aggregate(  # noqa: E731
-        F.transform(c, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x))
+    # shuffle); the vectors are joined back once for the exact verify, from
+    # the materialized table (the signature pass carries them through)
+    pair_ids = _band_pairs(stacked, id_col, max_bucket)
+    cands, va, vb = _join_pair_sides(pair_ids, signed, id_col, vec_col, small)
+    cosine = _dot(va, vb) / (F.sqrt(_dot(va, va)) * F.sqrt(_dot(vb, vb)) + F.lit(1e-30))
     return (
-        cands.withColumn("cosine", dot / (norm(va) * norm(vb) + F.lit(1e-30)))
+        cands.withColumn("cosine", cosine)
         .filter(F.col("cosine") >= threshold)
         .select("a", "b", "cosine")
     )

@@ -11,10 +11,11 @@ expressible (exact dedup, quality stats — Catalyst/Tungsten path), Arrow
 
 Scale notes:
 - exact dedup is a hash-aggregate on sha2(text) — one shuffle, AQE-skew safe;
-- MinHash-LSH is the standard band-bucket join: signatures (Arrow kernel,
-  one pass) → explode to (band, band_hash) → self-join on band keys. Bucket
-  sizes are capped (``max_bucket``) so a degenerate bucket (all-identical
-  docs) cannot produce a quadratic pair explosion on one executor;
+- every near-dup pipeline (MinHash over text or token arrays, SimHash,
+  embedding LSH) shares one banded-LSH stage: (band, h) bucket rows →
+  ``_band_pairs`` (one ``collect_list`` shuffle; bucket sizes capped at
+  ``max_bucket`` so a bucket of identical docs cannot go quadratic on one
+  executor) → ``_join_pair_sides`` for the verify;
 - SimHash candidates use 4x16-bit band exact-match (finds all pairs within
   Hamming distance 3 by pigeonhole), verified by popcount.
 """
@@ -30,7 +31,7 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
 
-from sketchlib import _worker, minhash as mh
+from sketchlib import _worker, arrowutil, minhash as mh
 from sketchlib.config import MinHashConfig
 from sketchlib.hashing import splitmix64
 
@@ -135,51 +136,92 @@ def _shingle_hashes(word_h: np.ndarray, starts: np.ndarray, n: int) -> tuple[np.
 
 
 # ---------------------------------------------------------------------------
-# MinHash signatures + LSH near-dup
+# MinHash signatures + the one banded-LSH stage
 # ---------------------------------------------------------------------------
+
+def _token_hashes(tokens) -> tuple[np.ndarray, np.ndarray]:
+    """Flat token-id hashes + per-doc segment starts for a batch of token
+    arrays — the token-array counterpart of :func:`_word_hashes`."""
+    flat, starts = arrowutil.list_to_flat(tokens)
+    return splitmix64(flat.astype(np.uint64), seed=11), starts
+
+
+def _signatures(
+    df: DataFrame, col: str, id_col: str, num_perm: int, shingle_n: int,
+    token_hashes,
+) -> DataFrame:
+    """(id, signature array<bigint>) — the one MinHash kernel. ``token_hashes``
+    maps a batch column to flat hashes + doc starts (``_word_hashes`` or
+    ``_token_hashes``); n-shingles then go through one-permutation hashing
+    (``minhash.signatures_segmented_oph``): one hash pass + one sort."""
+    cfg = MinHashConfig(num_perm=num_perm)
+    id_type = df.schema[id_col].dataType.simpleString()
+
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        _worker.drop_spark_zip_finders()
+        for batch in batches:
+            wh, starts = token_hashes(batch.column(col))
+            sh, sstarts = _shingle_hashes(wh, starts.astype(np.int64), shingle_n)
+            sigs = mh.signatures_segmented_oph(sh, sstarts, cfg)
+            arr = pa.FixedSizeListArray.from_arrays(
+                pa.array(sigs.view(np.int64).ravel(), type=pa.int64()), cfg.num_perm
+            ).cast(pa.list_(pa.int64()))  # uint64 reinterpreted as Spark bigint
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(id_col), arr], names=[id_col, "signature"])
+
+    return df.select(id_col, col).mapInArrow(fn, f"{id_col} {id_type}, signature array<bigint>")
+
 
 def minhash_signatures(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     num_perm: int = 128, shingle_n: int = 3,
 ) -> DataFrame:
-    """(id, signature array<bigint>) — per-doc MinHash over word n-shingles,
-    by one-permutation hashing with optimal densification
-    (``minhash.signatures_segmented_oph``): one hash pass + one sort per
-    batch."""
-    cfg = MinHashConfig(num_perm=num_perm)
-    in_fields = [(id_col, df.schema[id_col].dataType.simpleString())]
-    schema = ", ".join(f"{n} {t}" for n, t in in_fields) + ", signature array<bigint>"
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        _worker.drop_spark_zip_finders()
-        for batch in batches:
-            texts = batch.column(text_col)
-            ids = batch.column(id_col)
-            wh, starts = _word_hashes(texts)
-            sh, sstarts = _shingle_hashes(wh, starts.astype(np.int64), shingle_n)
-            sigs = mh.signatures_segmented_oph(sh, sstarts, cfg)
-            sig_i64 = sigs.view(np.int64)  # reinterpret for Spark bigint
-            arr = pa.FixedSizeListArray.from_arrays(
-                pa.array(sig_i64.ravel(), type=pa.int64()), cfg.num_perm
-            ).cast(pa.list_(pa.int64()))
-            yield pa.RecordBatch.from_arrays([ids, arr], names=[id_col, "signature"])
-
-    return df.select(id_col, text_col).mapInArrow(fn, schema)
+    """(id, signature array<bigint>) — per-doc MinHash over word n-shingles."""
+    return _signatures(df, text_col, id_col, num_perm, shingle_n, _word_hashes)
 
 
-def _bucket_pairs(capped: DataFrame, keys: list[str], payload: list[str]) -> DataFrame:
-    """Ordered within-bucket pairs from a thinned bucket table: ONE shuffle
-    (groupBy collect_list) + a JVM higher-order pair expansion, replacing the
-    former self-join on the bucket keys (which shuffled the full bucket table
-    TWICE — once per join side — plus a join stage). Buckets are already
-    capped, so a collected bucket holds <= ~2x max_bucket members.
+def token_minhash_signatures(
+    df: DataFrame, tokens_col: str = "tokens", id_col: str = "doc_id",
+    num_perm: int = 128, shingle_n: int = 3,
+) -> DataFrame:
+    """Per-doc MinHash signatures directly over the pre-tokenized corpus
+    shape (BASELINE.json:15: tokens array<int32>) — token-id n-gram shingles,
+    no text processing at all. This is the dedup op a tokenized training
+    pipeline actually runs."""
+    return _signatures(df, tokens_col, id_col, num_perm, shingle_n, _token_hashes)
 
-    ``payload`` columns ride along inside the collected struct (e.g. the
-    simhash value the verifier needs). Pair order is (a, b) with a < b by
-    value — identical to the old ``a.join(b).filter(a < b)`` output."""
-    member = F.struct(*[F.col(c) for c in payload])
-    grouped = capped.groupBy(*keys).agg(
-        F.array_sort(F.collect_list(member)).alias("_ms"))
+
+def _band_pairs(
+    stacked: DataFrame, id_col: str, max_bucket: int, payload: tuple[str, ...] = (),
+) -> DataFrame:
+    """The one banded-LSH candidate stage (MinHash, SimHash, embedding LSH).
+    ``stacked`` holds one row per (member, bucket): ``band``, ``h``, the id
+    and the ``payload`` columns. Returns distinct (a, b) id pairs, a < b,
+    that share a bucket, with each payload column as ``<col>_a``/``<col>_b``.
+
+    - NULL-``h`` rows (invalid embeddings) are dropped first: grouped, they
+      would form one bucket that the cap never sees.
+    - Oversized buckets (a duplicate-heavy corpus puts every identical doc
+      in the same buckets) are thinned to ~``max_bucket`` by a deterministic
+      ``xxhash64(id, band, h)`` sample, with no global sort: only the keys
+      of a small ``groupBy(band, h).count()`` are broadcast back.
+    - Pairs come from ONE shuffle (``collect_list`` per bucket) and a JVM
+      pair expansion, not a self-join that shuffles once per side. ``a < b``
+      also drops the (x, x) pair of an id repeated within a bucket."""
+    stacked = stacked.filter(F.col("h").isNotNull())
+    oversized = (
+        stacked.groupBy("band", "h").agg(F.count(F.lit(1)).alias("_n"))
+        .filter(F.col("_n") > max_bucket)
+    )
+    capped = (
+        stacked.join(F.broadcast(oversized), ["band", "h"], "left_outer")
+        .filter(
+            F.col("_n").isNull()
+            | (F.pmod(F.xxhash64(id_col, "band", "h"),
+                      F.ceil(F.col("_n") / max_bucket).cast("long")) == 0)
+        )
+    )
+    member = F.struct(*[F.col(c) for c in (id_col, *payload)])
     ms = F.col("_ms")
     pairs = F.flatten(
         F.transform(
@@ -190,7 +232,15 @@ def _bucket_pairs(capped: DataFrame, keys: list[str], payload: list[str]) -> Dat
             ),
         )
     )
-    return grouped.select(F.explode(pairs).alias("_p")).select("_p._x", "_p._y")
+    return (
+        capped.groupBy("band", "h").agg(F.array_sort(F.collect_list(member)).alias("_ms"))
+        .select(F.explode(pairs).alias("_p"))
+        .select(F.col(f"_p._x.{id_col}").alias("a"), F.col(f"_p._y.{id_col}").alias("b"),
+                *[F.col(f"_p._x.{c}").alias(f"{c}_a") for c in payload],
+                *[F.col(f"_p._y.{c}").alias(f"{c}_b") for c in payload])
+        .filter(F.col("a") < F.col("b"))
+        .distinct()
+    )
 
 
 def lsh_candidate_pairs(
@@ -198,21 +248,8 @@ def lsh_candidate_pairs(
     bands: int = 32, rows_per_band: int = 4, max_bucket: int = 200,
 ) -> DataFrame:
     """Band the signatures and emit distinct candidate (a, b) pairs with
-    a < b from every (band, band_hash) bucket. ``bands * rows_per_band``
-    must equal the signature length.
-
-    Pathological buckets (all-identical corpora) are capped WITHOUT a global
-    sort: bucket sizes are a tiny ``groupBy(band, h).count()`` aggregate;
-    only oversized buckets are broadcast back, and their members are thinned
-    to ~``max_bucket`` by a deterministic hash sample. (The previous
-    ``row_number`` window sorted the entire banded table — num_docs x bands
-    rows — in one shuffle, the pipeline's biggest cost at corpus scale;
-    normal-sized buckets now never shuffle for the cap at all.)
-
-    Pairs come from one ``collect_list`` aggregation per bucket
-    (:func:`_bucket_pairs`) rather than a self-join — the banded table is
-    shuffled once, not twice, and there is no join stage; memory per bucket
-    is bounded by the cap."""
+    a < b from every (band, band_hash) bucket (:func:`_band_pairs`).
+    ``bands * rows_per_band`` must equal the signature length."""
     # one small higher-order expression instead of 32 materialized band
     # columns + an explode over 32 structs: the old form built a ~300-node
     # expression tree that Catalyst re-optimized on every AQE replan (a
@@ -227,24 +264,7 @@ def lsh_candidate_pairs(
     )
     stacked = sigs.select(
         F.col(id_col), F.posexplode(band_hashes).alias("band", "h"))
-    oversized = (
-        stacked.groupBy("band", "h").agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") > max_bucket)
-    )
-    capped = (
-        stacked.join(F.broadcast(oversized), ["band", "h"], "left_outer")
-        .filter(
-            F.col("_n").isNull()
-            | (F.pmod(F.xxhash64(id_col, "band", "h"),
-                      F.ceil(F.col("_n") / max_bucket).cast("long")) == 0)
-        )
-        .drop("_n")
-    )
-    return (
-        _bucket_pairs(capped, ["band", "h"], [id_col])
-        .select(F.col(f"_x.{id_col}").alias("a"), F.col(f"_y.{id_col}").alias("b"))
-        .distinct()
-    )
+    return _band_pairs(stacked, id_col, max_bucket)
 
 
 # inputs whose Catalyst size estimate is below this are "small": a table
@@ -279,31 +299,45 @@ def _materialize(df: DataFrame, gate_df: DataFrame) -> tuple[DataFrame, bool]:
     return (df.localCheckpoint(eager=True) if small else df.cache()), small
 
 
-def _verify_candidate_pairs(
-    sigs: DataFrame, cands: DataFrame, id_col: str,
-    num_perm: int, threshold: float, small_input: bool,
-) -> DataFrame:
-    """Slot-agreement verification of candidate pairs against the full
-    signatures; emits (a, b, jaccard_est) for pairs >= threshold.
-    ``small_input`` (decided from the input plan's size estimate, no job)
-    switches the two signature joins to broadcast hash joins."""
-    if small_input:
+def _join_pair_sides(
+    pairs: DataFrame, table: DataFrame, id_col: str, col: str, small: bool,
+) -> tuple[DataFrame, "F.Column", "F.Column"]:
+    """The one verify join: ``table[col]`` for both ids of every (a, b)
+    pair, as ``(joined, col_a, col_b)``. ``small`` (from the input plan's
+    size estimate) broadcasts ``table``; large corpora shuffle-join."""
+    if small:
         # both join sides broadcast the SAME projection (rename above the
         # exchange, not below): the two BroadcastExchange children
         # canonicalize identically, so the second join reuses the first
         # build (ReusedExchange) — one broadcast materialization job
         # instead of two. Rows unchanged: same inner equi-joins.
-        base = F.broadcast(sigs.select(id_col, "signature"))
+        base = F.broadcast(table.select(id_col, col))
         joined = (
-            cands.join(base.alias("_sa"), F.col("a") == F.col(f"_sa.{id_col}"))
+            pairs.join(base.alias("_sa"), F.col("a") == F.col(f"_sa.{id_col}"))
             .join(base.alias("_sb"), F.col("b") == F.col(f"_sb.{id_col}"))
         )
-        sig_a, sig_b = F.col("_sa.signature"), F.col("_sb.signature")
-    else:
-        sa = sigs.select(F.col(id_col).alias("a"), F.col("signature").alias("sig_a"))
-        sb = sigs.select(F.col(id_col).alias("b"), F.col("signature").alias("sig_b"))
-        joined = cands.join(sa, "a").join(sb, "b")
-        sig_a, sig_b = F.col("sig_a"), F.col("sig_b")
+        return joined, F.col(f"_sa.{col}"), F.col(f"_sb.{col}")
+    sa = table.select(F.col(id_col).alias("a"), F.col(col).alias(f"{col}_a"))
+    sb = table.select(F.col(id_col).alias("b"), F.col(col).alias(f"{col}_b"))
+    return pairs.join(sa, "a").join(sb, "b"), F.col(f"{col}_a"), F.col(f"{col}_b")
+
+
+def _minhash_pairs(
+    df: DataFrame, col: str, id_col: str, num_perm: int, shingle_n: int,
+    bands: int, threshold: float, token_hashes,
+) -> DataFrame:
+    """The one MinHash near-dup driver: signatures → LSH candidates → slot-
+    agreement Jaccard estimate on the full signatures → pairs >= threshold."""
+    # size-adaptive join strategy (plan stats, no job): a provably small
+    # input broadcasts the signature table into the verification joins;
+    # large corpora keep the shuffle joins. (Skipping materialization for
+    # small inputs was measured SLOWER — 3 recomputed scan+signature branches
+    # cost more than the one barrier — so it is unconditional.)
+    sigs, small = _materialize(
+        _signatures(df, col, id_col, num_perm, shingle_n, token_hashes),
+        df.select(id_col, col))
+    cands = lsh_candidate_pairs(sigs, id_col, bands, num_perm // bands)
+    joined, sig_a, sig_b = _join_pair_sides(cands, sigs, id_col, "signature", small)
     agree = F.size(F.filter(F.zip_with(sig_a, sig_b, lambda x, y: x == y), lambda v: v))
     return (
         joined.withColumn("jaccard_est", agree / F.lit(num_perm))
@@ -317,50 +351,9 @@ def minhash_near_duplicates(
     num_perm: int = 128, shingle_n: int = 3, bands: int = 32,
     threshold: float = 0.7,
 ) -> DataFrame:
-    """Full near-dup pipeline: signatures → LSH candidates → Jaccard-estimate
-    verification (slot agreement on the full signatures) → pairs >= threshold."""
-    rows_per_band = num_perm // bands
-    # size-adaptive join strategy (plan stats, no job): a provably small
-    # input broadcasts the signature table into the verification joins;
-    # large corpora keep the shuffle joins. (Skipping materialization for
-    # small inputs was measured SLOWER — 3 recomputed scan+signature branches
-    # cost more than the one barrier — so it is unconditional.)
-    sigs, small = _materialize(minhash_signatures(df, text_col, id_col, num_perm, shingle_n),
-                               df.select(id_col, text_col))
-    cands = lsh_candidate_pairs(sigs, id_col, bands, rows_per_band)
-    return _verify_candidate_pairs(sigs, cands, id_col, num_perm, threshold, small)
-
-
-def token_minhash_signatures(
-    df: DataFrame, tokens_col: str = "tokens", id_col: str = "doc_id",
-    num_perm: int = 128, shingle_n: int = 3,
-) -> DataFrame:
-    """Per-doc MinHash signatures directly over the pre-tokenized corpus
-    shape (BASELINE.json:15: tokens array<int32>) — token-id n-gram shingles,
-    no text processing at all. This is the dedup op a tokenized training
-    pipeline actually runs."""
-    from sketchlib import arrowutil
-
-    cfg = MinHashConfig(num_perm=num_perm)
-    id_type = df.schema[id_col].dataType.simpleString()
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        _worker.drop_spark_zip_finders()
-        for batch in batches:
-            flat, starts = arrowutil.list_to_flat(batch.column(tokens_col))
-            wh = splitmix64(flat.astype(np.uint64), seed=11)
-            sh, sstarts = _shingle_hashes(wh, starts.astype(np.int64), shingle_n)
-            sigs = mh.signatures_segmented_oph(sh, sstarts, cfg)
-            arr = pa.FixedSizeListArray.from_arrays(
-                pa.array(sigs.view(np.int64).ravel(), type=pa.int64()), cfg.num_perm
-            ).cast(pa.list_(pa.int64()))
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(id_col), arr], names=[id_col, "signature"]
-            )
-
-    return df.select(id_col, tokens_col).mapInArrow(
-        fn, f"{id_col} {id_type}, signature array<bigint>"
-    )
+    """(a, b, jaccard_est) near-dup pairs over word n-shingles."""
+    return _minhash_pairs(df, text_col, id_col, num_perm, shingle_n, bands,
+                          threshold, _word_hashes)
 
 
 def token_near_duplicates(
@@ -368,14 +361,9 @@ def token_near_duplicates(
     num_perm: int = 128, shingle_n: int = 3, bands: int = 32,
     threshold: float = 0.7,
 ) -> DataFrame:
-    """MinHash-LSH near-dup over token arrays: signatures → band-bucket join
-    → slot-agreement verification (same machinery as the text pipeline)."""
-    rows_per_band = num_perm // bands
-    sigs, small = _materialize(
-        token_minhash_signatures(df, tokens_col, id_col, num_perm, shingle_n),
-        df.select(id_col, tokens_col))
-    cands = lsh_candidate_pairs(sigs, id_col, bands, rows_per_band)
-    return _verify_candidate_pairs(sigs, cands, id_col, num_perm, threshold, small)
+    """(a, b, jaccard_est) near-dup pairs over token-id n-shingles."""
+    return _minhash_pairs(df, tokens_col, id_col, num_perm, shingle_n, bands,
+                          threshold, _token_hashes)
 
 
 # ---------------------------------------------------------------------------
@@ -431,44 +419,16 @@ def simhash_near_duplicates(
     max_hamming: int = 3, max_bucket: int = 200,
 ) -> DataFrame:
     """Near-dup pairs by SimHash: 4x16-bit bands (pigeonhole: any pair within
-    Hamming distance 3 shares at least one exact band) → verify popcount.
-
-    Degenerate buckets are capped exactly like ``lsh_candidate_pairs``: a
-    duplicate-heavy corpus (the dedup workload!) puts every identical doc in
-    all 4 of the same (band, v) buckets, and an uncapped self-join goes
-    quadratic on those single keys. Only oversized-bucket KEYS are broadcast;
-    members are thinned by a deterministic hash sample."""
+    Hamming distance 3 shares at least one exact band) → candidate pairs
+    from :func:`_band_pairs` (capped buckets; the simhash value rides along
+    as payload) → verify popcount."""
     sh, _ = _materialize(simhash(df, text_col, id_col), df.select(id_col, text_col))
-    bands = [
-        F.shiftrightunsigned(F.col("simhash"), b * 16).bitwiseAND(F.lit(0xFFFF)).alias(f"_s{b}")
-        for b in range(4)
-    ]
-    banded = sh.select(id_col, "simhash", *bands)
-    stacked = banded.select(
-        id_col, "simhash",
-        F.explode(F.array(*[F.struct(F.lit(b).alias("band"), F.col(f"_s{b}").alias("v"))
-                            for b in range(4)])).alias("bv"),
-    ).select(id_col, "simhash", F.col("bv.band").alias("band"), F.col("bv.v").alias("v"))
-    oversized = (
-        stacked.groupBy("band", "v").agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") > max_bucket)
-    )
-    stacked = (
-        stacked.join(F.broadcast(oversized), ["band", "v"], "left_outer")
-        .filter(
-            F.col("_n").isNull()
-            | (F.pmod(F.xxhash64(id_col, "band", "v"),
-                      F.ceil(F.col("_n") / max_bucket).cast("long")) == 0)
-        )
-        .drop("_n")
-    )
-    pairs = (
-        _bucket_pairs(stacked, ["band", "v"], [id_col, "simhash"])
-        .select(F.col(f"_x.{id_col}").alias("a"), F.col(f"_y.{id_col}").alias("b"),
-                F.col("_x.simhash").alias("ha"), F.col("_y.simhash").alias("hb"))
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
+    bands = [F.struct(F.lit(b).alias("band"), F.shiftrightunsigned(F.col("simhash"), b * 16)
+                      .bitwiseAND(F.lit(0xFFFF)).alias("h")) for b in range(4)]
+    stacked = sh.select(id_col, "simhash", F.explode(F.array(*bands)).alias("bh")).select(
+        id_col, "simhash", "bh.band", "bh.h")
+    pairs = _band_pairs(stacked, id_col, max_bucket, ("simhash",))
+    hamming = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
     return pairs.withColumn("hamming", hamming).filter(
         F.col("hamming") <= max_hamming
     ).select("a", "b", "hamming")
@@ -519,11 +479,9 @@ def ngram_jaccard_pairs(df: DataFrame, pairs: DataFrame, text_col: str = "text",
             )
         ).alias("grams"),
     )
-    ga = grams.select(F.col(id_col).alias("a"), F.col("grams").alias("ga"))
-    gb = grams.select(F.col(id_col).alias("b"), F.col("grams").alias("gb"))
-    joined = pairs.join(ga, "a").join(gb, "b")
-    inter = F.size(F.array_intersect("ga", "gb"))
-    union = F.size(F.array_union("ga", "gb"))
+    joined, ga, gb = _join_pair_sides(pairs, grams, id_col, "grams", small=False)
+    inter = F.size(F.array_intersect(ga, gb))
+    union = F.size(F.array_union(ga, gb))
     return joined.withColumn("jaccard", inter / union).select("a", "b", "jaccard")
 
 

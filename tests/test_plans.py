@@ -117,8 +117,9 @@ def test_file_scan_fast_path_shuffles_only_file_paths(spark, corpus_path):
     from sketchlib import agg
     from sketchlib.config import HLLConfig
 
-    partials = agg.build_partials_files(
-        spark, corpus_path, [agg.SketchSpec("hll", HLLConfig(p=10), "tokens")])
+    files = agg.list_data_files(spark, corpus_path)
+    partials = agg.build_partials_files_indexed(
+        spark, list(enumerate(files)), [agg.SketchSpec("hll", HLLConfig(p=10), "tokens")])
     plan = _plan(partials)
     assert "Exchange" not in plan, plan
     assert "Range" in plan, plan
@@ -156,11 +157,11 @@ def test_approx_topk_single_input_scan(spark, corpus_path):
 
 
 def test_near_dup_joins_never_cartesian(spark):
-    """The LSH band-bucket self-joins (minhash text, token-array, simhash)
-    must plan as hash joins on the band/bucket key — a CartesianProduct or
-    BroadcastNestedLoopJoin here is the all-pairs blowup the banding exists
-    to avoid, and would be fatal at 100 TB."""
-    from sketchlib import textops
+    """The near-dup pipelines (minhash text, token-array, simhash,
+    embedding) group candidates by band/bucket key and join only on ids — a
+    CartesianProduct or BroadcastNestedLoopJoin here is the all-pairs blowup
+    the banding exists to avoid, and would be fatal at 100 TB."""
+    from sketchlib import simsearch, textops
 
     docs = spark.createDataFrame(
         [(str(i), "the quick brown fox jumps over dog %d" % i) for i in range(60)],
@@ -168,10 +169,14 @@ def test_near_dup_joins_never_cartesian(spark):
     toks = spark.createDataFrame(
         [(str(i), [j % 97 for j in range(i, i + 40)]) for i in range(60)],
         "doc_id string, tokens array<int>")
+    vecs = spark.createDataFrame(
+        [(i, [float((i * 7 + j) % 11) for j in range(8)]) for i in range(60)],
+        "vec_id long, embedding array<double>")
     plans = {
         "minhash": _plan(textops.minhash_near_duplicates(docs)),
         "token": _plan(textops.token_near_duplicates(toks)),
         "simhash": _plan(textops.simhash_near_duplicates(docs)),
+        "embedding": _plan(simsearch.embedding_near_duplicates(vecs, dim=8)),
     }
     for name, plan in plans.items():
         assert "CartesianProduct" not in plan, name

@@ -279,12 +279,23 @@ def test_arrow_scan_fast_path_file_lineage(spark, tmp_path):
     datagen.corpus_df(spark, 2_000, partitions=4).write.mode("overwrite").parquet(path)
     files = agg.list_data_files(spark, path)
     assert 1 <= len(files) <= 4 and all(f.endswith(".parquet") for f in files)
-    partials = agg.build_partials_files(
-        spark, path, [agg.SketchSpec("hll", HLLConfig(p=10), "tokens")]).collect()
+    partials = agg.build_partials_files_indexed(
+        spark, list(enumerate(files)), [agg.SketchSpec("hll", HLLConfig(p=10), "tokens")]
+    ).collect()
     # one partial per NON-EMPTY file, keyed by its index in the sorted listing
     parts = sorted(r["part"] for r in partials)
     assert parts == sorted(set(parts)) and set(parts) <= set(range(len(files)))
     assert sum(r["rows"] for r in partials) == 2_000
+
+
+def test_build_sketches_files_rejects_empty_listing(spark, tmp_path):
+    """A missing or empty input path is a typed error, like ``job.run_files``,
+    not an empty result after a Spark job."""
+    spec = [agg.SketchSpec("hll", HLLConfig(p=10), "tokens")]
+    (tmp_path / "empty").mkdir()
+    for path in (str(tmp_path / "missing"), str(tmp_path / "empty"), []):
+        with pytest.raises(SketchConfigError, match="no parquet data files"):
+            agg.build_sketches_files(spark, path, spec)
 
 
 def test_auto_fanout_sizing():

@@ -91,8 +91,8 @@ def test_ngram_jaccard_short_docs_ansi_safe(spark):
 
 def test_simhash_bucket_cap_on_duplicate_heavy_corpus(spark):
     """A corpus dominated by one identical doc must not go quadratic on its
-    band buckets: with max_bucket tiny, the thinned self-join still finds
-    duplicate pairs among the survivors and never errors."""
+    band buckets: with max_bucket tiny, the thinned buckets still yield
+    duplicate pairs among the survivors and never error."""
     rows = [Row(doc_id=i, text="the same boilerplate page body repeated")
             for i in range(300)]
     rows.append(Row(doc_id=300, text="one genuinely different document here"))
@@ -160,6 +160,41 @@ def test_lsh_bucket_cap_without_window_sort(spark):
     # uncapped: C(300,2) = 44_850 pairs from the identical bucket alone;
     # capped: ~C(20,2) per band, partially overlapping across 16 bands
     assert 0 < n < 10_000, n
+
+
+def _near_dups_of_repeated_row(spark, kind):
+    """Near-dup pairs of an input that is one row repeated (same id, same
+    content)."""
+    if kind == "embedding":
+        vec = [float(j % 5) + 1.0 for j in range(8)]
+        df = spark.createDataFrame([("a", vec)] * 2, "vec_id string, embedding array<double>")
+        return simsearch.embedding_near_duplicates(df, dim=8)
+    if kind == "token":
+        df = spark.createDataFrame([("a", list(range(40)))] * 2, "doc_id string, tokens array<int>")
+        return textops.token_near_duplicates(df)
+    text = " ".join(f"w{j}" for j in range(40))
+    df = spark.createDataFrame([("a", text)] * 2, "doc_id string, text string")
+    if kind == "minhash":
+        return textops.minhash_near_duplicates(df)
+    return textops.simhash_near_duplicates(df)
+
+
+@pytest.mark.parametrize("kind", ["minhash", "token", "simhash", "embedding"])
+def test_near_dups_never_pair_an_id_with_itself(spark, kind):
+    """An id that appears twice in a bucket must not yield an (x, x) pair:
+    every pipeline emits only a < b."""
+    assert _near_dups_of_repeated_row(spark, kind).collect() == []
+
+
+def test_band_pairs_drop_null_buckets(spark):
+    """Rows whose bucket hash is NULL (invalid embeddings) never pair, even
+    when there are more of them than ``max_bucket``: grouped together they
+    would be one uncapped bucket of all-pairs."""
+    rows = [(i, 0, None) for i in range(300)]
+    rows += [(1000 + i, b, 7) for i in range(4) for b in (0, 1)]
+    stacked = spark.createDataFrame(rows, "id long, band int, h long")
+    got = sorted(tuple(r) for r in textops._band_pairs(stacked, "id", 200).collect())
+    assert got == [(1000 + i, 1000 + j) for i in range(4) for j in range(i + 1, 4)]
 
 
 def _horner_reference(text: str) -> int:
@@ -482,7 +517,7 @@ def test_embedding_near_dup_distinct_carries_ids_only(vectors):
                  if "HashAggregate" in ln and "keys=[a#" in ln.replace(" ", "")]
     assert agg_lines, plan
     for ln in agg_lines:
-        assert "_va" not in ln and "_vb" not in ln, ln
+        assert "embedding" not in ln, ln
 
 
 def test_textops_importable_without_pandas():
