@@ -14,9 +14,12 @@ Scale notes (the 100 TB story):
 - the only shuffles are the optional salted repartition and the merge tree;
   partials are tiny (KB–MB blobs), so the merge shuffle moves ~P blobs, not
   data;
-- merge is B-ary (default 64): 1,000,000 partitions → 3 levels; each level is
-  a groupBy over (sketch, group, bucket) — no skew possible since bucket ids
-  are uniform by construction;
+- merge is a B-ary tree whose shape one function decides
+  (``merge_partials`` via ``_tree_shape``): B is sized from the largest
+  partial blob so one merge task holds <= 256 MiB (KB blobs merge thousands
+  of partials in one level, 128 MiB Bloom filters get B = 4), and the depth
+  covers the partial count; each level is a groupBy over (sketch, group,
+  bucket) — no skew possible since bucket ids are uniform by construction;
 - token-frequency skew (Zipf corpora) cannot skew the *build* because
   partials are per-partition regardless of key values; salting
   (``salt_repartition``) equalizes *partition sizes* when upstream layout is
@@ -76,6 +79,20 @@ class SketchSpec:
     @property
     def sketch(self) -> str:
         return _CFG_TO_SKETCH[type(self.cfg)]
+
+    @property
+    def payload_bytes(self) -> int:
+        """Upper-bound payload size of one partial blob (merge-tree sizing)."""
+        cfg = self.cfg
+        if isinstance(cfg, BloomConfig):
+            return cfg.m_bits // 8
+        if isinstance(cfg, HLLConfig):
+            return cfg.m
+        if isinstance(cfg, CMSConfig):
+            return cfg.depth * cfg.width * (cfg.counter_bits // 8)
+        if isinstance(cfg, CuckooConfig):
+            return cfg.capacity * 2
+        return 1 << 16  # KLL/tdigest/minhash
 
 
 # the one partial-row schema: build output, pre-merge and every merge-tree
@@ -513,6 +530,11 @@ def _merge_blob_rows(tbl: pa.Table) -> pa.Table:
     }, schema=PARTIAL_SCHEMA)
 
 
+def _scan_tasks(spark, n_files: int) -> int:
+    """Tasks of the file-scan stage: one wave, never more than the files."""
+    return max(1, min(n_files, int(spark.sparkContext.defaultParallelism)))
+
+
 def build_partials_files_indexed(
     spark,
     pairs: list[tuple[int, str]],
@@ -606,7 +628,7 @@ def build_partials_files_indexed(
             yield from _merge_blob_rows(tbl.slice(lo, hi - lo)).to_batches()
 
     sorted_pairs = sorted((int(i), f) for i, f in pairs)
-    n_tasks = max(1, min(len(sorted_pairs), int(spark.sparkContext.defaultParallelism)))
+    n_tasks = _scan_tasks(spark, len(sorted_pairs))
     path_bytes = sum(len(f) for _, f in sorted_pairs)
     if path_bytes <= _MAX_CLOSURE_PATH_BYTES:
         # ship the (small) file list inside the task closure and drive the
@@ -642,7 +664,6 @@ def build_sketches_files(
     path: str | list[str],
     specs: list[SketchSpec],
     group_by: str | None = None,
-    fanout: int | None = None,
 ) -> DataFrame:
     """End-to-end fast-path build: pyarrow file scan -> partials -> tree
     merge. Same output contract as ``build_sketches``. Lists the input
@@ -654,53 +675,34 @@ def build_sketches_files(
         raise SketchConfigError(f"no parquet data files under {path}")
     partials = build_partials_files_indexed(
         spark, list(enumerate(files)), specs, group_by, local_merge=True)
-    fanout = fanout or _auto_fanout(specs)
     # local_merge leaves at most one partial per (task, sketch, group); size
     # the tree for that count, not the file count (the tree shape leaves the
     # monoid sketches' bytes unchanged, not KLL's or t-digest's)
-    n_parts = max(1, min(len(files), int(spark.sparkContext.defaultParallelism)))
-    return merge_partials(partials, fanout=fanout,
-                          levels=merge_levels(fanout, n_parts))
+    return merge_partials(partials, _scan_tasks(spark, len(files)),
+                          max(s.payload_bytes for s in specs))
 
 
-def _payload_bytes(cfg) -> int:
-    """Upper-bound payload size per partial blob, for merge-fanout sizing."""
-    if isinstance(cfg, BloomConfig):
-        return cfg.m_bits // 8
-    if isinstance(cfg, HLLConfig):
-        return cfg.m
-    if isinstance(cfg, CMSConfig):
-        return cfg.depth * cfg.width * (cfg.counter_bits // 8)
-    if isinstance(cfg, CuckooConfig):
-        return cfg.capacity * 2
-    return 1 << 16  # KLL/tdigest/minhash
-
-
-def _auto_fanout(specs: list[SketchSpec], budget_bytes: int = 256 << 20) -> int:
-    """Merge-tree fanout sized so one merge task holds <= ``budget_bytes``
-    of blobs: small sketches (a 256 KB blocked Bloom, KB-sized HLL/KLL)
-    merge thousands of partials in ONE level — a multi-level tree is pure
-    stage-latency overhead at that size (measured: 2-level merge of 500
-    KB-blob rows costs ~6 s of scheduler/worker round-trips at local[32]).
-    Huge filters (2^30-bit Bloom = 128 MB) still get a real tree."""
-    biggest = max(_payload_bytes(s.cfg) for s in specs)
-    return int(max(4, min(4096, budget_bytes // max(biggest, 1))))
-
-
-def merge_levels(fanout: int, n_parts: int) -> int:
-    """Tree depth so fanout**levels covers n_parts — the single source of
-    truth for fresh builds and resumes (a resume must merge with the same
-    tree shape as an uninterrupted run)."""
+def _tree_shape(n_parts: int, blob_bytes: int) -> tuple[int, int]:
+    """``(fanout, levels)`` of the merge tree over ``n_parts`` partials of up
+    to ``blob_bytes`` each: one merge task holds <= 256 MiB of blobs
+    (fanout clamped to [4, 4096]), so KB sketches merge thousands of partials
+    in ONE level (measured: a 2-level merge of 500 KB-blob rows costs ~6 s of
+    scheduler/worker round-trips at local[32]) while 128 MB Bloom filters get
+    a real tree; ``levels`` is the least with fanout**levels >= n_parts."""
+    fanout = int(max(4, min(4096, (256 << 20) // max(blob_bytes, 1))))
     levels = 1
     while fanout**levels < max(n_parts, 1):
         levels += 1
-    return levels
+    return fanout, levels
 
 
-def merge_partials(partials: DataFrame, fanout: int = 64, levels: int = 1) -> DataFrame:
-    """B-ary tree merge. ``levels`` is ceil(log_fanout(P)) — 1 for P <= 64,
-    2 for P <= 4096, 3 covers a million partitions. Each level shuffles only
-    blob rows."""
+def merge_partials(partials: DataFrame, n_parts: int, blob_bytes: int) -> DataFrame:
+    """Tree-merge partial rows into one row per (sketch, group) over
+    ``n_parts`` partials of up to ``blob_bytes``. The one owner of the tree's
+    shape: KLL and t-digest interior merges compact, so their bytes depend on
+    it (a resume must merge like an uninterrupted run). Each level shuffles
+    only blob rows."""
+    fanout, levels = _tree_shape(n_parts, blob_bytes)
     schema = from_arrow_schema(PARTIAL_SCHEMA)
     df = partials
     for lvl in range(levels - 1):
@@ -716,14 +718,11 @@ def build_sketches(
     num_partitions: int | None = None,
     salt: int = 0,
     salt_keys: list[str] | None = None,
-    fanout: int | None = None,
 ) -> DataFrame:
     """End-to-end: partials → tree merge → one row per (sketch, group)."""
     partials = build_partials(df, specs, group_by, num_partitions, salt, salt_keys)
-    n_parts = num_partitions or df.rdd.getNumPartitions()
-    fanout = fanout or _auto_fanout(specs)
-    return merge_partials(partials, fanout=fanout,
-                          levels=merge_levels(fanout, n_parts))
+    return merge_partials(partials, num_partitions or df.rdd.getNumPartitions(),
+                          max(s.payload_bytes for s in specs))
 
 
 def collect_blobs(final: DataFrame) -> dict[tuple[str, str], bytes]:

@@ -19,7 +19,8 @@ Mechanism:
    killed after writing some partials resumes where it stopped, and because
    every sketch merge is a commutative monoid over deterministic partials,
    the resumed result is byte-identical to a single uninterrupted run (T5).
-4. ``finalize`` tree-merges the partials parquet into final blobs.
+4. ``_resume``, the one checkpoint loop of ``run`` and ``run_files``, then
+   tree-merges one row per (sketch, group, part) into final blobs.
 
 At 100 TB / 1000 executors: P is chosen so one logical partition is a few GB
 of tokens; the checkpoint write is P blob rows (KB–MB each); resume cost is
@@ -154,6 +155,31 @@ def completed_parts(spark: SparkSession, ckpt: str) -> set[int]:
     return {r["part"] for r in rows}
 
 
+def _resume(spark: SparkSession, checkpoint_dir: str, meta_json: str, build_missing,
+            n_parts: int, specs: tuple[SketchSpec, ...]) -> DataFrame:
+    """The one checkpoint loop: pin (or check) the job meta, append the
+    partials ``build_missing(done part ids)`` returns (``None`` when nothing
+    is missing), then tree-merge every checkpointed partial."""
+    _fs_mkdirs(spark, checkpoint_dir)
+    meta_p = _meta_path(checkpoint_dir)
+    if not _fs_exists(spark, meta_p):
+        _fs_write_text(spark, meta_p, meta_json)
+    elif _fs_read_text(spark, meta_p) != meta_json:
+        raise SketchConfigError(
+            f"checkpoint at {checkpoint_dir} was created by a different job spec "
+            "(sketches, grouping, partitioning or input file listing changed)")
+    missing = build_missing(completed_parts(spark, checkpoint_dir))
+    if missing is not None:
+        missing.write.mode("append").parquet(_partials_path(checkpoint_dir))
+    # Duplicate appends for the same (sketch, group, part) — e.g. two racing
+    # resumed runs that both saw the part missing — are byte-identical by
+    # determinism, so one-row-per-key makes the merge exact no matter how
+    # many times a partial landed.
+    partials = spark.read.parquet(_partials_path(checkpoint_dir)).dropDuplicates(
+        ["sketch", "group", "part"])
+    return agg.merge_partials(partials, n_parts, max(s.payload_bytes for s in specs))
+
+
 def run(
     spark: SparkSession,
     df: DataFrame,
@@ -163,53 +189,22 @@ def run(
     """Build (or resume) the job; returns the final merged sketch DataFrame.
 
     Safe to call repeatedly: each call completes any missing partials, then
-    merges. The partials parquet is the durable unit of progress.
-    """
-    _fs_mkdirs(spark, checkpoint_dir)
-    meta_p = _meta_path(checkpoint_dir)
-    if _fs_exists(spark, meta_p):
-        existing = _fs_read_text(spark, meta_p)
-        if existing != job.to_json():
-            raise SketchConfigError(
-                f"checkpoint at {checkpoint_dir} was created by a different job spec"
-            )
-    else:
-        _fs_write_text(spark, meta_p, job.to_json())
+    merges. The partials parquet is the durable unit of progress."""
 
-    done = completed_parts(spark, checkpoint_dir)
-    remaining = set(range(job.num_partitions)) - done
-    if remaining:
+    def build_missing(done: set[int]) -> DataFrame | None:
+        remaining = set(range(job.num_partitions)) - done
+        if not remaining:
+            return None
         src = with_part_id(df, job)
         if done:
             # partition pruning on the derived id: only missing parts rescan
             src = src.filter(F.col(PART_COL).isin([int(p) for p in remaining]))
-        partials = agg.build_partials(
-            src,
-            list(job.specs),
-            group_by=job.group_by,
-            num_partitions=min(job.num_partitions, 2048),
-            part_col=PART_COL,
-        )
-        partials.write.mode("append").parquet(_partials_path(checkpoint_dir))
+        return agg.build_partials(
+            src, list(job.specs), group_by=job.group_by,
+            num_partitions=min(job.num_partitions, 2048), part_col=PART_COL)
 
-    return finalize(spark, job, checkpoint_dir)
-
-
-def finalize(spark: SparkSession, job: JobSpec, checkpoint_dir: str) -> DataFrame:
-    partials = spark.read.parquet(_partials_path(checkpoint_dir))
-    # Duplicate appends for the same (sketch, group, part) — e.g. two racing
-    # resumed runs that both saw the part missing — are byte-identical by
-    # determinism, so one-row-per-key makes the merge exact no matter how
-    # many times a partial landed.
-    partials = partials.dropDuplicates(["sketch", "group", "part"])
-    # size the tree exactly like fresh builds do (merge_levels is the single
-    # source of truth; a hand-inlined copy here would silently diverge from
-    # it and break the resume-identical-to-fresh-run guarantee), with fanout
-    # auto-sized from the specs' payload bytes like run_files
-    fanout = agg._auto_fanout(list(job.specs))
-    return agg.merge_partials(
-        partials, fanout=fanout,
-        levels=agg.merge_levels(fanout, job.num_partitions))
+    return _resume(spark, checkpoint_dir, job.to_json(), build_missing,
+                   job.num_partitions, job.specs)
 
 
 def lineage(spark: SparkSession, checkpoint_dir: str) -> DataFrame:
@@ -260,51 +255,17 @@ def run_files(
     Re-runs only missing file indices; duplicate appends from racing resumes
     dedup exactly (byte-identical by determinism). Files with zero rows
     yield no partial and are harmlessly re-scanned on resume (empty scan)."""
-    _fs_mkdirs(spark, checkpoint_dir)
     files = tuple(agg.list_data_files(spark, path))
     if not files:
         # mirror build_sketches_files: fail here with a typed error instead
         # of a raw AnalysisException on the nonexistent partials dir later
         raise SketchConfigError(f"no parquet data files under {path}")
     job = FileJobSpec(specs=tuple(specs), files=files, group_by=group_by)
-    meta_p = _meta_path(checkpoint_dir)
-    if _fs_exists(spark, meta_p):
-        existing = _fs_read_text(spark, meta_p)
-        if existing != job.to_json():
-            raise SketchConfigError(
-                f"checkpoint at {checkpoint_dir} was created by a different "
-                "file-job spec (sketches, grouping, or input file listing changed)"
-            )
-    else:
-        _fs_write_text(spark, meta_p, job.to_json())
 
-    done = completed_parts(spark, checkpoint_dir)
-    remaining = [(i, f) for i, f in enumerate(files) if i not in done]
-    if remaining:
-        partials = agg.build_partials_files_indexed(spark, remaining, list(specs), group_by)
-        partials.write.mode("append").parquet(_partials_path(checkpoint_dir))
+    def build_missing(done: set[int]) -> DataFrame | None:
+        remaining = [(i, f) for i, f in enumerate(files) if i not in done]
+        if not remaining:
+            return None
+        return agg.build_partials_files_indexed(spark, remaining, list(specs), group_by)
 
-    merged = spark.read.parquet(_partials_path(checkpoint_dir))
-    merged = merged.dropDuplicates(["sketch", "group", "part"])
-    fanout = agg._auto_fanout(list(specs))
-    return agg.merge_partials(
-        merged, fanout=fanout, levels=agg.merge_levels(fanout, len(files)))
-
-
-def run_with_kill(
-    spark: SparkSession,
-    df: DataFrame,
-    job: JobSpec,
-    checkpoint_dir: str,
-    only_parts: set[int],
-) -> None:
-    """Test hook (T5): simulate a job killed after checkpointing only
-    ``only_parts`` — builds and persists just those partials, then 'dies'."""
-    _fs_mkdirs(spark, checkpoint_dir)
-    _fs_write_text(spark, _meta_path(checkpoint_dir), job.to_json())
-    src = with_part_id(df, job).filter(F.col(PART_COL).isin([int(p) for p in only_parts]))
-    partials = agg.build_partials(
-        src, list(job.specs), group_by=job.group_by,
-        num_partitions=min(job.num_partitions, 2048), part_col=PART_COL,
-    )
-    partials.write.mode("append").parquet(_partials_path(checkpoint_dir))
+    return _resume(spark, checkpoint_dir, job.to_json(), build_missing, len(files), job.specs)

@@ -228,6 +228,7 @@ def embedding_near_duplicates(
         cands.withColumn("cosine", cosine)
         .filter(F.col("cosine") >= threshold)
         .select("a", "b", "cosine")
+        .distinct()  # the join meets every row of a repeated id
     )
 
 

@@ -147,18 +147,12 @@ def read_windowed_sketches(spark: SparkSession, out_dir: str) -> DataFrame:
         # from a replay in this layout.
         partials = partials.dropDuplicates(
             [c for c in partials.columns if c != "t_ms"])
-    # size the merge tree from the actual payloads (the batch paths size it
-    # from the specs, which the read side does not have): a hardcoded
-    # fanout=64 would pull 64 blobs into one task regardless of blob size —
-    # e.g. 8 GB of 128 MB Bloom partials — and force a pointless extra
-    # shuffle stage for the common KB-blob case. The partials table is tiny
-    # (P blobs per window) so the two sizing aggregates are cheap.
+    # the read side has no specs: size the merge tree from the measured
+    # payloads (the partials table is tiny — P blobs per window — so the
+    # two sizing aggregates are cheap)
     stats = partials.agg(
         F.max(F.length("blob")).alias("mx"), F.count("*").alias("n")).collect()[0]
-    max_blob, n_rows = int(stats["mx"] or 1), max(int(stats["n"]), 1)
-    fanout = int(max(2, min(1024, (256 << 20) // max(max_blob, 1))))
-    return agg.merge_partials(
-        partials, fanout=fanout, levels=agg.merge_levels(fanout, n_rows))
+    return agg.merge_partials(partials, int(stats["n"]), int(stats["mx"] or 1))
 
 
 def stateful_windowed_sketch(

@@ -339,10 +339,12 @@ def _minhash_pairs(
     cands = lsh_candidate_pairs(sigs, id_col, bands, num_perm // bands)
     joined, sig_a, sig_b = _join_pair_sides(cands, sigs, id_col, "signature", small)
     agree = F.size(F.filter(F.zip_with(sig_a, sig_b, lambda x, y: x == y), lambda v: v))
+    # the join meets every row of a repeated id: one output row per pair
     return (
         joined.withColumn("jaccard_est", agree / F.lit(num_perm))
         .filter(F.col("jaccard_est") >= threshold)
         .select("a", "b", "jaccard_est")
+        .distinct()
     )
 
 

@@ -180,10 +180,8 @@ def approx_topk(
     try:
         partials = fused.where(F.col("blob").isNotNull()).select(
             *agg.PARTIAL_SCHEMA.names)
-        fanout = agg._auto_fanout([agg.SketchSpec("cms", cfg, col)])
-        n_parts = df.rdd.getNumPartitions()
         merged = agg.merge_partials(
-            partials, fanout=fanout, levels=agg.merge_levels(fanout, n_parts))
+            partials, df.rdd.getNumPartitions(), agg.SketchSpec("cms", cfg, col).payload_bytes)
         blobs = agg.collect_blobs(merged)
         if ("cms", "") not in blobs:
             # every partition was empty: no partials (and no candidates)

@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from sketchlib import agg, datagen, job
-from sketchlib.config import BloomConfig, HLLConfig, KLLConfig, SketchConfigError
+from sketchlib.config import BloomConfig, HLLConfig, KLLConfig, SketchConfigError, TDigestConfig
 
 
 def _job():
@@ -30,6 +30,14 @@ def corpus(spark):
     df.unpersist()
 
 
+def _run_killed_after(spark, corpus, j, checkpoint_dir, parts):
+    """A run killed right after checkpointing ``parts``: ``job.run`` on the
+    rows of those parts appends their partials, and its merged result is
+    never collected."""
+    kept = job.with_part_id(corpus, j).filter(F.col(job.PART_COL).isin(sorted(parts)))
+    job.run(spark, kept.drop(job.PART_COL), j, checkpoint_dir)
+
+
 def test_resume_after_kill_is_byte_identical(spark, corpus, tmp_path_factory):
     j = _job()
     # uninterrupted reference run
@@ -38,7 +46,7 @@ def test_resume_after_kill_is_byte_identical(spark, corpus, tmp_path_factory):
 
     # killed run: only parts {0,1,2} checkpointed, then resume
     kill_dir = str(tmp_path_factory.mktemp("kill"))
-    job.run_with_kill(spark, corpus, j, kill_dir, only_parts={0, 1, 2})
+    _run_killed_after(spark, corpus, j, kill_dir, {0, 1, 2})
     assert job.completed_parts(spark, kill_dir) == {0, 1, 2}
     resumed = agg.collect_blobs(job.run(spark, corpus, j, kill_dir))
     assert resumed == ref
@@ -71,15 +79,22 @@ def test_lineage_records_all_partitions(spark, corpus, tmp_path_factory):
 
 def test_duplicate_partial_appends_are_deduped(spark, corpus, tmp_path_factory):
     """Two racing resumed runs can both append partials for the same part;
-    finalize must keep one row per (sketch, group, part) so non-idempotent
+    the merge must keep one row per (sketch, group, part) so non-idempotent
     sketches (KLL here) are not double-weighted."""
     j = _job()
     ref_dir = str(tmp_path_factory.mktemp("dedup_ref"))
     ref = agg.collect_blobs(job.run(spark, corpus, j, ref_dir))
 
     dup_dir = str(tmp_path_factory.mktemp("dedup_dup"))
-    job.run_with_kill(spark, corpus, j, dup_dir, only_parts={0, 1})
-    job.run_with_kill(spark, corpus, j, dup_dir, only_parts={1, 2})  # part 1 duplicated
+    _run_killed_after(spark, corpus, j, dup_dir, {0, 1})
+    # the racing run's append: part 1's partials land a second time
+    part1 = job.with_part_id(corpus, j).filter(F.col(job.PART_COL) == 1)
+    agg.build_partials(part1, list(j.specs), num_partitions=j.num_partitions,
+                       part_col=job.PART_COL).write.mode("append").parquet(
+        job._partials_path(dup_dir))
+    kll_rows = spark.read.parquet(job._partials_path(dup_dir)).filter(
+        "sketch = 'kll' AND part = 1").count()
+    assert kll_rows == 2
     got = agg.collect_blobs(job.run(spark, corpus, j, dup_dir))
     assert got == ref
 
@@ -110,12 +125,15 @@ def test_salted_partitions_are_balanced(spark, corpus):
 def test_file_job_resume_after_kill_byte_identical(spark, corpus, tmp_path_factory):
     """Fast-path (Arrow file-scan) resume: kill after only some FILES have
     checkpointed partials; a resumed run rebuilds only the missing files and
-    the final blobs equal an uninterrupted run's byte-for-byte."""
+    the final blobs equal an uninterrupted run's byte-for-byte — also for
+    KLL and t-digest, whose bytes depend on the merge tree's shape."""
     src = str(tmp_path_factory.mktemp("filejob_src"))
     corpus.repartition(4).write.mode("overwrite").parquet(src)
     specs = [
         agg.SketchSpec("bloom", BloomConfig(m_bits=1 << 18, k=4), "tokens"),
         agg.SketchSpec("hll", HLLConfig(p=11), "tokens"),
+        agg.SketchSpec("kll", KLLConfig(k=128), "n_tok"),
+        agg.SketchSpec("tdigest", TDigestConfig(compression=100), "n_tok"),
     ]
     files = agg.list_data_files(spark, src)
     assert len(files) >= 2

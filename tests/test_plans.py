@@ -53,12 +53,13 @@ def test_no_shuffle_in_default_partial_build(spark, corpus_path):
 
 def test_merge_tree_is_arrow_grouped_map(spark, corpus_path):
     """Every merge-tree level is an Arrow grouped map: blob columns go to
-    the fold as Arrow, never through pandas. Four partials at fanout 2 make
-    a two-level tree, so both the bucketed level and the final level show."""
+    the fold as Arrow, never through pandas. Sixteen partials of 128 MiB
+    (fanout 4) make a two-level tree, so both the bucketed level and the
+    final level show."""
     corpus = spark.read.parquet(corpus_path)
-    final = agg.build_sketches(
-        corpus, [agg.SketchSpec("hll", HLLConfig(p=10), "tokens")],
-        num_partitions=4, fanout=2)
+    partials = agg.build_partials(
+        corpus, [agg.SketchSpec("hll", HLLConfig(p=10), "tokens")], num_partitions=4)
+    final = agg.merge_partials(partials, 16, 128 << 20)
     plan = _plan(final)
     # formatted plans echo each node in the tree and in the details: count
     # the "(n) FlatMapGroupsInArrow" detail headers

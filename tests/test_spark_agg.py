@@ -152,12 +152,15 @@ def test_spark_partition_count_byte_identical(spark, corpus):
 
 
 def test_merge_tree_multilevel_equivalence(spark, corpus):
+    """16 HLL partials merged by one-, two- and three-level trees (the shape
+    chosen by ``merge_partials`` from its (n_parts, blob_bytes)) give the
+    same bytes: the monoid sketches are tree-shape-invariant."""
     spec = [agg.SketchSpec("hll", HLLConfig(p=10), "tokens")]
     partials = agg.build_partials(corpus, spec, num_partitions=16)
-    one = agg.collect_blobs(agg.merge_partials(partials, fanout=64, levels=1))
-    two = agg.collect_blobs(agg.merge_partials(partials, fanout=4, levels=2))
-    three = agg.collect_blobs(agg.merge_partials(partials, fanout=3, levels=3))
-    assert one == two == three
+    shapes = [(16, 1 << 10), (16, 64 << 20), (64, 128 << 20)]
+    assert [agg._tree_shape(n, b)[1] for n, b in shapes] == [1, 2, 3]
+    blobs = [agg.collect_blobs(agg.merge_partials(partials, n, b)) for n, b in shapes]
+    assert blobs[0] == blobs[1] == blobs[2]
 
 
 def test_bloom_prune_join_exactness(spark):
@@ -298,12 +301,28 @@ def test_build_sketches_files_rejects_empty_listing(spark, tmp_path):
             agg.build_sketches_files(spark, path, spec)
 
 
-def test_auto_fanout_sizing():
-    small = [agg.SketchSpec("hll", HLLConfig(p=12), "tokens")]
-    huge = [agg.SketchSpec("bloom", BloomConfig(m_bits=1 << 30, k=8, word_bits=64,
-                                                words_per_block=8, sectors=8), "tokens")]
-    assert agg._auto_fanout(small) == 4096  # KB blobs: one-level merge
-    assert agg._auto_fanout(huge) == 4      # 128 MB blobs: real tree (min clamp)
+def test_tree_shape_table():
+    """The one merge-tree policy: fanout = 256 MiB // blob_bytes clamped to
+    [4, 4096], depth = least with fanout**depth >= n_parts. Batch callers
+    size from ``SketchSpec.payload_bytes``, the stream reader from the
+    largest blob it reads."""
+    hll12 = agg.SketchSpec("hll", HLLConfig(p=12), "tokens").payload_bytes
+    bloom30 = agg.SketchSpec("bloom", BloomConfig(m_bits=1 << 30, k=8, word_bits=64,
+                                                  words_per_block=8, sectors=8),
+                             "tokens").payload_bytes
+    assert (hll12, bloom30) == (1 << 12, 1 << 27)
+    table = [
+        (8, hll12, (4096, 1)),            # KB blobs: one-level merge (max clamp)
+        (5000, hll12, (4096, 2)),
+        (0, hll12, (4096, 1)),            # no partials still merges once
+        (2, bloom30, (4, 1)),             # 128 MiB Bloom partials: min clamp
+        (16, bloom30 + 64, (4, 2)),       # a 128 MiB stream blob with header
+        (64, 64 << 20, (4, 3)),
+        (256, 1 << 20, (256, 1)),
+        (257, 1 << 20, (256, 2)),
+    ]
+    for n_parts, blob_bytes, shape in table:
+        assert agg._tree_shape(n_parts, blob_bytes) == shape, (n_parts, blob_bytes)
 
 
 def test_null_group_values_sketch_under_null_label(spark):

@@ -162,18 +162,18 @@ def test_lsh_bucket_cap_without_window_sort(spark):
     assert 0 < n < 10_000, n
 
 
-def _near_dups_of_repeated_row(spark, kind):
-    """Near-dup pairs of an input that is one row repeated (same id, same
-    content)."""
+def _near_dups_of_rows(spark, kind, ids):
+    """Near-dup pairs of one row of content under each id of ``ids``."""
     if kind == "embedding":
         vec = [float(j % 5) + 1.0 for j in range(8)]
-        df = spark.createDataFrame([("a", vec)] * 2, "vec_id string, embedding array<double>")
+        df = spark.createDataFrame([(i, vec) for i in ids], "vec_id string, embedding array<double>")
         return simsearch.embedding_near_duplicates(df, dim=8)
     if kind == "token":
-        df = spark.createDataFrame([("a", list(range(40)))] * 2, "doc_id string, tokens array<int>")
+        df = spark.createDataFrame([(i, list(range(40))) for i in ids],
+                                   "doc_id string, tokens array<int>")
         return textops.token_near_duplicates(df)
     text = " ".join(f"w{j}" for j in range(40))
-    df = spark.createDataFrame([("a", text)] * 2, "doc_id string, text string")
+    df = spark.createDataFrame([(i, text) for i in ids], "doc_id string, text string")
     if kind == "minhash":
         return textops.minhash_near_duplicates(df)
     return textops.simhash_near_duplicates(df)
@@ -183,7 +183,15 @@ def _near_dups_of_repeated_row(spark, kind):
 def test_near_dups_never_pair_an_id_with_itself(spark, kind):
     """An id that appears twice in a bucket must not yield an (x, x) pair:
     every pipeline emits only a < b."""
-    assert _near_dups_of_repeated_row(spark, kind).collect() == []
+    assert _near_dups_of_rows(spark, kind, ["a", "a"]).collect() == []
+
+
+@pytest.mark.parametrize("kind", ["minhash", "token", "simhash", "embedding"])
+def test_near_dups_emit_a_repeated_ids_pair_once(spark, kind):
+    """Rows a, a, b of identical content are one pair (a, b), not one per
+    copy of a: the verify join meets both rows of id a."""
+    got = [(r["a"], r["b"]) for r in _near_dups_of_rows(spark, kind, ["a", "a", "b"]).collect()]
+    assert got == [("a", "b")]
 
 
 def test_band_pairs_drop_null_buckets(spark):
